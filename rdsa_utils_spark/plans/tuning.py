@@ -15,6 +15,7 @@ Capability parity (public-API re-design):
 
 from __future__ import annotations
 
+import os
 import time
 from typing import Optional, Sequence, Tuple
 
@@ -102,6 +103,17 @@ def set_df_columns_nullable(
 DEFAULT_SPREAD_TASK_BYTES = 64 * 1024
 
 
+def _spread_task_bytes() -> int:
+    """SPARK_GRAFT_SPREAD_TASK_BYTES as a positive int; a non-numeric
+    or non-positive value falls back to the default (the value divides
+    the plan size, so 0 would raise)."""
+    try:
+        value = int(os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", DEFAULT_SPREAD_TASK_BYTES))
+    except ValueError:
+        return DEFAULT_SPREAD_TASK_BYTES
+    return value if value > 0 else DEFAULT_SPREAD_TASK_BYTES
+
+
 def ensure_parallelism(
     df: DataFrame,
     min_partitions: Optional[int] = None,
@@ -139,14 +151,8 @@ def ensure_parallelism(
     if min_partitions is not None:
         target = min_partitions
     else:
-        import os
-
         cores = df.sparkSession.sparkContext.defaultParallelism
-        bpt = bytes_per_task or int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_TASK_BYTES", DEFAULT_SPREAD_TASK_BYTES,
-            ),
-        )
+        bpt = bytes_per_task or _spread_task_bytes()
         try:
             est = plan_size_in_bytes(df)
         except Exception:  # py4j / unresolved-plan edge: fall back

@@ -16,10 +16,42 @@ pushes predicates and prunes columns into the parquet scan. Emptiness
 validation uses ``df.isEmpty()`` (one partition-0 task) instead of the
 reference's ``df.rdd.isEmpty()`` (which forfeits plan optimization),
 and runs at most once per load.
+
+Schema catalog: every :func:`read_parquet` call (and so every table
+read of the query registry, ``register_tables`` and the snapshot
+readers) resolves its schema through a catalog held per
+``SparkSession`` in a weak-keyed map, so it is freed with the session.
+An entry holds the ``StructType`` Spark inferred for the path and the
+INT64-NANOS columns the pyarrow footer probe found. It is keyed by:
+
+- the absolute path;
+- a fingerprint of the path's content: a hashed recursive stat listing
+  (relative name, inode, size and ``st_mtime_ns`` of every file);
+- the session confs that change inferred parquet schemas
+  (``spark.sql.parquet.binaryAsString``, ``.int96AsTimestamp``,
+  ``.inferTimestampNTZ.enabled``, ``.mergeSchema``,
+  ``spark.sql.legacy.parquet.nanosAsLong``,
+  ``spark.sql.sources.partitionColumnTypeInference.enabled``,
+  ``spark.sql.caseSensitive``).
+
+This is the reference's metastore model (``load_and_validate_table``
+reads a schema the catalog already knows) for plain parquet paths.
+A hit reads with ``spark.read.schema(cached)``: no schema-inference
+job, no footer probe. Each call still builds a fresh relation, and
+Spark still lists the files on every read, so the data is never
+stale; a rewrite in place changes the fingerprint and the next read
+infers again. Paths the driver cannot ``stat`` — remote schemes such
+as ``s3a://`` or ``gs://`` — are not cached and infer on every read.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import os
+import re
+import stat
+import weakref
 from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,26 +105,66 @@ def _postprocess_columns(
     return df
 
 
-def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan tolerant of TIMESTAMP(NANOS) columns.
+#: Session confs whose values change the schema Spark infers for a
+#: parquet path; part of every schema-catalog key.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
-    Spark has no nanosecond timestamp type and (≥3.2) refuses NANOS
-    parquet columns outright. Fallback: re-read with
-    ``spark.sql.legacy.parquet.nanosAsLong`` and convert each
-    nanos column (identified from the parquet footer via pyarrow)
-    to a microsecond TimestampType — the same truncation DuckDB and
-    pandas apply when downcasting ns→us.
-    """
-    nano_cols: list[str] = []
+#: SparkSession -> {absolute path: (stamp, inferred StructType, nanos
+#: columns)}. Weak-keyed, so a session's catalog goes with the session.
+#: No lock: an entry is used only while its stamp still matches, so a
+#: race between readers costs at most one more inference.
+_SCHEMA_CATALOGS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _local_path(path: str) -> Optional[str]:
+    """Absolute local path for ``path``, or ``None`` when the driver
+    cannot ``stat`` it (a remote scheme such as ``s3a://``)."""
+    if path.startswith("file:"):
+        path = re.sub(r"^file:(//)?", "", path)
+    elif re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", path):
+        return None
+    return os.path.abspath(path)
+
+
+def _fingerprint(local: str) -> str:
+    """Hash of a recursive stat listing of ``local``: relative name,
+    inode, size and ``st_mtime_ns`` of every file. Any rewrite in place
+    (new part files, an overwritten file, a swapped directory) changes
+    it. Raises ``OSError`` when the path cannot be listed."""
+    st = os.stat(local)
+    if not stat.S_ISDIR(st.st_mode):
+        listing = [("", st.st_ino, st.st_size, st.st_mtime_ns)]
+    else:
+        listing = []
+        for root, dirs, files in os.walk(local):
+            dirs.sort()
+            for name in sorted(files):
+                full = os.path.join(root, name)
+                fst = os.stat(full)
+                listing.append(
+                    (os.path.relpath(full, local), fst.st_ino, fst.st_size, fst.st_mtime_ns),
+                )
+    return hashlib.sha1(repr(listing).encode()).hexdigest()
+
+
+def _nanos_columns(path: str) -> list[str]:
+    """INT64-backed TIMESTAMP(NANOS) columns, from the parquet footer
+    of ``path`` (its first ``*.parquet`` file for a directory)."""
     try:
-        import glob as _glob
-        import os as _os
-
         import pyarrow.parquet as _pq
 
         probe = path
-        if _os.path.isdir(path):
-            files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
+        if os.path.isdir(path):
+            files = sorted(glob.glob(os.path.join(path, "*.parquet")))
             probe = files[0] if files else path
         pf = _pq.ParquetFile(probe)
         # pyarrow reports BOTH real TIMESTAMP(NANOS) and legacy INT96
@@ -105,23 +177,68 @@ def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
             for i in range(len(pf.schema))
         }
         schema = pf.schema_arrow
-        nano_cols = [
+        return [
             name
             for name, typ in zip(schema.names, schema.types)
             if str(typ).startswith("timestamp[ns") and phys.get(name) == "INT64"
         ]
     except Exception:  # pragma: no cover — remote path: let Spark try/raise
-        nano_cols = []
+        return []
+
+
+def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan tolerant of TIMESTAMP(NANOS) columns, with the
+    schema resolved through the session's schema catalog.
+
+    Spark has no nanosecond timestamp type and (≥3.2) refuses NANOS
+    parquet columns outright. Fallback: read with
+    ``spark.sql.legacy.parquet.nanosAsLong`` and convert each
+    nanos column (identified from the parquet footer via pyarrow)
+    to a microsecond TimestampType — the same truncation DuckDB and
+    pandas apply when downcasting ns→us.
+
+    A catalog hit passes the cached schema to the reader, so the scan
+    launches no schema-inference job and skips the footer probe. The
+    relation itself is built fresh on every call (Spark lists the
+    files again; self-joins keep distinct expression IDs).
+    """
+    local = _local_path(path)
+    stamp = None
+    if local is not None:
+        try:
+            # conf.get(key) is the effective value (the default when
+            # unset), so unset and set-to-default make the same key.
+            stamp = (
+                _fingerprint(local),
+                tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+            )
+        except OSError:  # missing or unlistable: uncached, Spark raises
+            pass
+    catalog = _SCHEMA_CATALOGS.setdefault(spark, {})
+    cached = catalog.get(local) if stamp is not None else None
+    hit = cached is not None and cached[0] == stamp
+    if hit:
+        _, schema, nano_cols = cached
+        reader = spark.read.schema(schema)
+    else:
+        nano_cols = _nanos_columns(path)
+        reader = spark.read
     if not nano_cols:
-        return spark.read.parquet(path)
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+        df = reader.parquet(path)
+    else:
+        prev = spark.conf.get(_NANOS_AS_LONG, "false")
+        spark.conf.set(_NANOS_AS_LONG, "true")
+        try:
+            df = reader.parquet(path)
+        finally:
+            spark.conf.set(_NANOS_AS_LONG, prev)
+    if stamp is not None and not hit:
+        # One entry per path: a changed stamp replaces the old entry.
+        catalog[local] = (stamp, df.schema, nano_cols)
     for c in nano_cols:
         # Integer division: ns-epoch longs exceed double's 53-bit
         # mantissa, so float division here would corrupt microseconds.
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     return df
 
 
@@ -132,7 +249,13 @@ def read_parquet(
     rename_columns: Optional[Mapping[str, str]] = None,
     drop_columns: Optional[Sequence[str]] = None,
 ) -> DataFrame:
-    """Parquet scan with optional column post-processing."""
+    """Parquet scan with optional column post-processing.
+
+    The schema comes from the session's schema catalog (module
+    docstring): inferred by Spark on the first read of a path and again
+    after the path changes, reused otherwise. Remote paths (``s3a://``,
+    ``gs://``, ...) are not cached and infer on every read.
+    """
     return _postprocess_columns(
         _read_parquet_nanos_safe(spark, path), keep_columns, rename_columns, drop_columns,
     )
@@ -309,7 +432,7 @@ def register_tables(
     for name in tables:
         path = f"{sf_dir}/{name}.parquet"
         try:
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
         except Exception:
             continue
         df.createOrReplaceTempView(name)

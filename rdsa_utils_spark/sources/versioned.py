@@ -39,6 +39,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rdsa_utils_spark.sources.readers import read_parquet
+
 _MANIFEST = "_manifest.json"
 _VDIR_RE = re.compile(r"^v(\d{5})$")
 
@@ -121,7 +123,7 @@ def write_snapshot(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_dir)
-    n_rows = df.sparkSession.read.parquet(data_dir).count()
+    n_rows = read_parquet(df.sparkSession, data_dir).count()
     manifest["versions"].append(
         {
             "version": version,
@@ -149,8 +151,6 @@ def read_snapshot(
     Raises ``FileNotFoundError`` for an empty root and ``ValueError``
     for an unknown version — a pinned training run must fail loudly,
     never silently read a different snapshot."""
-    from rdsa_utils_spark.sources.readers import read_parquet
-
     client = client or _default_client()
     manifest = _read_manifest(root, client)
     if manifest["current"] is None:

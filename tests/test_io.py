@@ -270,6 +270,187 @@ def test_read_parquet_handles_int96_timestamps(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
+# read_parquet schema catalog
+# --------------------------------------------------------------------------
+
+
+def _jobs_in(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"schema-catalog-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_parquet_int64_nanos_miss_then_hit(spark, tmp_path):
+    """A real INT64 TIMESTAMP(NANOS) file takes the nanosAsLong detour
+    on the inferring read and on the cached one alike."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_001_999]
+    path = str(tmp_path / "nanos.parquet")
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array(ns, type=pa.timestamp("ns"))}),
+        path,
+    )
+    col = pq.ParquetFile(path).schema.column(1)
+    assert col.physical_type == "INT64" and "timeUnit=nanoseconds" in str(col.logical_type)
+    before = spark.conf.get(key, "false")
+    for expected_jobs in (None, 0):  # miss, then hit
+        df, jobs = _jobs_in(spark, lambda: read_parquet(spark, path))
+        if expected_jobs is not None:
+            assert jobs == expected_jobs
+        assert spark.conf.get(key, "false") == before
+        assert df.schema["ts"].dataType.simpleString() == "timestamp"
+        got = sorted(
+            (r.id, r.us) for r in df.select("id", F.unix_micros("ts").alias("us")).collect()
+        )
+        assert got == [(1, ns[0] // 1000), (2, ns[1] // 1000)]
+
+
+def test_read_parquet_second_read_launches_no_job(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string").write.parquet(path)
+    first, jobs1 = _jobs_in(spark, lambda: read_parquet(spark, path))
+    second, jobs2 = _jobs_in(spark, lambda: read_parquet(spark, path))
+    assert jobs1 >= 1  # schema inference
+    assert jobs2 == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_read_parquet_overwrite_with_new_schema(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(path)
+    assert read_parquet(spark, path).columns == ["id", "v"]
+    spark.createDataFrame([(2.5,)], "x double").write.mode("overwrite").parquet(path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["x"]
+    assert [r.x for r in df.collect()] == [2.5]
+
+
+def test_read_parquet_single_file_rewritten_in_place(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_read_parquet_dynamic_partition_overwrite(spark, tmp_path):
+    path = str(tmp_path / "parts")
+    spark.createDataFrame(
+        [(1, 1, "a"), (2, 2, "b")], "id long, k int, v string",
+    ).write.partitionBy("k").parquet(path)
+    before = read_parquet(spark, path)
+    assert sorted((r.id, r.k, r.v) for r in before.collect()) == [(1, 1, "a"), (2, 2, "b")]
+    spark.createDataFrame(
+        [(3, 2, "c"), (4, 2, "d")], "id long, k int, v string",
+    ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "k",
+    ).parquet(path)
+    after = read_parquet(spark, path)
+    assert after.schema == before.schema
+    assert sorted((r.id, r.k, r.v) for r in after.collect()) == [
+        (1, 1, "a"), (3, 2, "c"), (4, 2, "d"),
+    ]
+
+
+def test_read_parquet_after_merge_upsert_swap(spark, tmp_path):
+    from rdsa_utils_spark.sources.writers import merge_upsert
+
+    path = str(tmp_path / "target")
+    schema = "id long, v string"
+    merge_upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], schema), path, ["id"])
+    assert sorted(tuple(r) for r in read_parquet(spark, path).collect()) == [(1, "a"), (2, "b")]
+    merge_upsert(spark, spark.createDataFrame([(2, "B"), (3, "c")], schema), path, ["id"])
+    got = sorted(tuple(r) for r in read_parquet(spark, path).select("id", "v").collect())
+    assert got == [(1, "a"), (2, "B"), (3, "c")]
+
+
+def test_read_parquet_binary_as_string_is_part_of_the_key(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.binaryAsString"
+    path = str(tmp_path / "bin.parquet")
+    # Written without Spark's schema footer, which would override the conf.
+    pq.write_table(pa.table({"id": [1], "b": pa.array([b"hi"], pa.binary())}), path)
+    assert read_parquet(spark, path).schema["b"].dataType.simpleString() == "binary"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df = read_parquet(spark, path)
+        assert df.schema["b"].dataType.simpleString() == "string"
+        assert [r.b for r in df.collect()] == ["hi"]
+    finally:
+        spark.conf.set(key, prev)
+    assert read_parquet(spark, path).schema["b"].dataType.simpleString() == "binary"
+
+
+def test_read_parquet_self_join_of_two_reads(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1)], "id long, parent long",
+    ).write.parquet(path)
+    child = read_parquet(spark, path)
+    parent = read_parquet(spark, path)
+    joined = child.join(parent, child["parent"] == parent["id"]).select(
+        child["id"].alias("c"), parent["parent"].alias("gp"),
+    )
+    assert sorted(tuple(r) for r in joined.collect()) == [(1, 3), (2, 1), (3, 2)]
+
+
+def test_read_parquet_concurrent_readers_get_their_own_schema(spark, tmp_path):
+    from concurrent.futures import ThreadPoolExecutor
+
+    paths = {
+        str(tmp_path / "a"): ["id", "a"],
+        str(tmp_path / "b"): ["b", "c", "d"],
+    }
+    for path, cols in paths.items():
+        spark.createDataFrame([tuple(range(len(cols)))], cols).write.parquet(path)
+    order = list(paths) * 12
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        got = list(pool.map(lambda p: read_parquet(spark, p).columns, order, timeout=120))
+    assert got == [paths[p] for p in order]
+
+
+def test_read_parquet_remote_paths_are_not_cached():
+    from rdsa_utils_spark.sources.readers import _local_path
+
+    assert _local_path("s3a://bucket/t.parquet") is None
+    assert _local_path("gs://bucket/t.parquet") is None
+    assert _local_path("file:///data/t.parquet") == "/data/t.parquet"
+    assert _local_path("/data/./t.parquet") == "/data/t.parquet"
+
+
+def test_snapshot_reads_after_write_are_catalog_hits(spark, tmp_path):
+    from rdsa_utils_spark.sources.versioned import read_snapshot, write_snapshot
+
+    root = str(tmp_path / "snap")
+    write_snapshot(spark.createDataFrame([(1, "a")], ["id", "v"]), root)
+    df, jobs = _jobs_in(spark, lambda: read_snapshot(spark, root))
+    assert jobs == 0
+    assert [tuple(r) for r in df.collect()] == [(1, "a")]
+
+
+# --------------------------------------------------------------------------
 # versioned snapshots
 # --------------------------------------------------------------------------
 

@@ -9,7 +9,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from rdsa_utils_spark.plans.tuning import ensure_parallelism
+from rdsa_utils_spark.plans.tuning import (
+    DEFAULT_SPREAD_TASK_BYTES,
+    _spread_task_bytes,
+    ensure_parallelism,
+)
+from rdsa_utils_spark.session import _default_driver_memory
 
 
 def _cores(spark) -> int:
@@ -58,12 +63,64 @@ def test_env_quantum_override(spark, monkeypatch):
     assert out.rdd.getNumPartitions() == _cores(spark)
 
 
+@pytest.mark.parametrize("value", ["abc", "0"])
+def test_malformed_env_quantum_falls_back_to_default(spark, monkeypatch, value):
+    # A non-numeric or non-positive quantum must not raise (ValueError,
+    # ZeroDivisionError): it falls back to DEFAULT_SPREAD_TASK_BYTES.
+    df = spark.range(0, 1000, 1, 1)
+    monkeypatch.delenv("SPARK_GRAFT_SPREAD_TASK_BYTES", raising=False)
+    expected = ensure_parallelism(df, keys=["id"]).rdd.getNumPartitions()
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", value)
+    assert _spread_task_bytes() == DEFAULT_SPREAD_TASK_BYTES
+    out = ensure_parallelism(df, keys=["id"])
+    assert out.rdd.getNumPartitions() == expected
+
+
 def test_local_session_heap_is_machine_derived(spark):
     # The local profile must not run on Spark's 1g default: the heap
-    # defaults to min(8g, physical RAM / 4), overridable via
+    # defaults to min(8g, available memory / 4), overridable via
     # SPARK_LOCAL_DRIVER_MEM (see session.py; guide §5).
     if os.environ.get("SPARK_LOCAL_DRIVER_MEM"):
         pytest.skip("explicit SPARK_LOCAL_DRIVER_MEM override in env")
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    expected = f"{max(1, min(8, phys // (4 * 1024 ** 3)))}g"
-    assert spark.conf.get("spark.driver.memory") == expected
+    sc = spark.sparkContext
+    if not (sc.master.startswith("local[") and sc.getConf().get("spark.ui.enabled") == "false"):
+        pytest.skip("session was not built by the local profile")
+    assert spark.conf.get("spark.driver.memory") == _default_driver_memory()
+
+
+def _write(path, text):
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as fh:
+        fh.write(text)
+
+
+@pytest.mark.parametrize(
+    "proc, files, expected",
+    [
+        # cgroup v2: the tightest memory.max from the cgroup up to the root
+        ("0::/app/job\n", {"app/memory.max": "4294967296\n", "app/job/memory.max": "max\n"}, 4 << 30),
+        ("0::/\n", {"memory.max": "max\n"}, None),
+        # cgroup v1, with and without the unlimited sentinel
+        ("4:memory:/ns\n", {"memory/ns/memory.limit_in_bytes": "2147483648\n"}, 2 << 30),
+        ("4:memory:/ns\n", {"memory/ns/memory.limit_in_bytes": "9223372036854771712\n"}, None),
+        # container without a cgroup namespace: the limit sits at the mount root
+        ("4:cpu,memory:/docker/abc\n", {"memory/memory.limit_in_bytes": "1073741824\n"}, 1 << 30),
+    ],
+)
+def test_cgroup_memory_limit(tmp_path, monkeypatch, proc, files, expected):
+    from rdsa_utils_spark import session
+
+    root = tmp_path / "cgroup"
+    for rel, text in files.items():
+        _write(str(root / rel), text)
+    _write(str(tmp_path / "proc_cgroup"), proc)
+    monkeypatch.setattr(session, "_CGROUP_ROOT", str(root))
+    monkeypatch.setattr(session, "_PROC_CGROUP", str(tmp_path / "proc_cgroup"))
+    assert session._cgroup_memory_limit() == expected
+
+
+def test_default_heap_respects_cgroup_limit(monkeypatch):
+    from rdsa_utils_spark import session
+
+    monkeypatch.setattr(session, "_cgroup_memory_limit", lambda: 6 << 30)
+    assert session._default_driver_memory() == "1g"
