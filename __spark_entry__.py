@@ -3,7 +3,8 @@
 ``entry(spark)`` runs the flagship query on sf0.001. ``queries()``
 exposes one named query per implemented operator (SURVEY.md §2 +
 extensions); ``oracle_sql()`` gives the DuckDB-runnable ANSI
-equivalent for each (omitted only for genuinely non-SQL ops).
+equivalent for each. Both are views of ``_REGISTRY`` at the end of
+this file, one ``(q_<name>, oracle SQL)`` row per query.
 
 Determinism notes (so Spark and DuckDB hash-match):
 - Money-scale sums are computed over ``decimal(38,6)`` casts (exact,
@@ -30,7 +31,7 @@ from rdsa_utils_spark.operators.filters import filter_out_values, map_column_val
 from rdsa_utils_spark.operators.joins import asof_join, join_multi_dfs
 from rdsa_utils_spark.operators.reshape import melt
 from rdsa_utils_spark.operators.sets import union_mismatched_dfs
-from rdsa_utils_spark.operators.similarity import brute_force_topk, ivf_topk
+from rdsa_utils_spark.operators.similarity import brute_force_topk
 from rdsa_utils_spark.operators.text import tokens, with_fingerprint, with_text_stats
 from rdsa_utils_spark.operators.windows import (
     drop_duplicates_reproducible,
@@ -2367,21 +2368,6 @@ ORDER BY doc_id, rank
 """
 
 
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate nearest neighbours: spherical-k-means cells +
-    nprobe search, exact cosine rescoring. Approximate by design
-    (recall < 1) — rows-only driver check; the exact counterpart is
-    cosine_topk."""
-    emb = _t(spark, sf_dir, "embeddings")
-    # nprobe 6/8: random vectors lack cluster structure, so a high
-    # probe fraction is needed for recall (tests/test_recall.py
-    # asserts ≥0.9 at nprobe=7; clustered corpora probe far fewer).
-    out = ivf_topk(emb, emb, dim=64, k=5, n_cells=8, nprobe=6, iters=3)
-    return out.select(
-        "query_id", "candidate_id", F.round("cosine", 6).alias("cosine"),
-    ).orderBy("query_id", F.col("cosine").desc(), "candidate_id")
-
-
 def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON column path: extract a field from the ``props`` JSON string
     and aggregate — ``get_json_object`` stays JVM-side (Jackson), no
@@ -2677,7 +2663,7 @@ ORDER BY s_suppkey
 
 
 # --------------------------------------------------------------------------
-# Batch 2: non-SQL-expressible ops (rows-only driver check)
+# Batch 2: randomized ops (md5-seeded, so their oracles replay them)
 # --------------------------------------------------------------------------
 
 def q_minhash_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4213,123 +4199,6 @@ ORDER BY g.event_type, hour
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return q_revenue_by_nation(spark, SF_DEFAULT)
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Driver-declared registry — capped at 50 entries so EVERY
-    declared query receives a driver CORRECTNESS verdict (round 1
-    declared 74 and the driver checked only the first 50, leaving 24
-    with no verdict at all). Ordering contract: deterministic
-    exact-replay oracles first, the sketch/LSH queries whose oracles
-    replay md5-derived randomness last (all 50 are oracle-backed since
-    the md5-plane/sketch replays landed), so a count-capped checker
-    always verifies the strongest evidence first.
-
-    Everything retired from this window lives on in
-    :func:`extra_queries` — still benched by bench.py and still
-    oracle-checked in CI (tests/test_extra_oracles.py) — it just no
-    longer consumes driver verdict slots on near-duplicate TPC-H
-    variants.
-    """
-    return {
-        # --- all 50 oracle-backed since round 6 (the final three are
-        # sketch/LSH queries whose oracles replay the md5-derived
-        # randomness; kept last per the original ordering contract) ---
-        "revenue_by_nation": q_revenue_by_nation,
-        "pricing_summary": q_pricing_summary,
-        "top_orders": q_top_orders,
-        "payload_dedup": q_payload_dedup,
-        "payload_near_dups": q_payload_near_dups,
-        # round-7 window rotation (second pass): eleven long-stable
-        # queries whose operator coverage is duplicated elsewhere moved
-        # to extra_queries() (still CI-oracle-checked); the round-7
-        # calibration/dedup/eval wave takes their driver-verdict slots.
-        "dsir_weights": q_dsir_weights,
-        "gopher_rules": q_gopher_rules,
-        "logreg_token_classifier": q_logreg_token_classifier,
-        "substring_dedup": q_substring_dedup,
-        "cluster_best_dedup": q_cluster_best_dedup,
-        "pca_power_replay": q_pca_power_replay,
-        "range_join_events": q_range_join_events,
-        "language_id": q_language_id,
-        "multimodal_meta": q_multimodal_meta,
-        "session_windows": q_session_windows,
-        "token_budget_mix": q_token_budget_mix,
-        "auc_discount_returns": q_auc_discount_returns,
-        "ndcg_termscan": q_ndcg_termscan,
-        "forecast_revenue": q_forecast_revenue,
-        "decayed_event_value": q_decayed_event_value,
-        "l_diversity_customers": q_l_diversity_customers,
-        "isotonic_discount_returns": q_isotonic_discount_returns,
-        "platt_discount_returns": q_platt_discount_returns,
-        "woe_priority_fulfilled": q_woe_priority_fulfilled,
-        "conformal_lang_threshold": q_conformal_lang_threshold,
-        "minhash_near_dedup": q_minhash_near_dedup,
-        "ivf_topk_replay": q_ivf_topk_replay,
-        "kmeans_cluster_profile": q_kmeans_cluster_profile,
-        "matryoshka_recall": q_matryoshka_recall,
-        # round-8 window rotation: the round-7 second half + the two
-        # new round-8 operators (win-rate significance, DoReMi mixture)
-        "ece_discount_returns": q_ece_discount_returns,
-        "brand_bt_ratings": q_brand_bt_ratings,
-        "neyman_customer_sample": q_neyman_customer_sample,
-        "zipf_tokens": q_zipf_tokens,
-        "win_rate_brands": q_win_rate_brands,
-        "doremi_mix": q_doremi_mix,
-        # round-9 window rotation: the round-8 gate/contamination/
-        # bootstrap wave takes driver slots from three long-stable
-        # queries whose operator coverage is duplicated elsewhere
-        # (bloom semi-join -> dedup_incremental_bloom; multi-join ->
-        # revenue_by_nation; digit-law stats -> ks/tornqvist), all
-        # demoted with oracles intact.
-        "calibrated_gate_discounts": q_calibrated_gate_discounts,
-        "contamination_check": q_contamination_check,
-        "acctbal_bootstrap_ci": q_acctbal_bootstrap_ci,
-        # round-10 window rotation: the round-9 SQ8-quantization and
-        # streaming-decontamination wave takes driver slots from two
-        # long-stable queries whose operator coverage is duplicated
-        # elsewhere (token counting -> zipf_tokens; KS drift -> the
-        # CI-checked PSI/chi2/JSD family), both demoted with oracles
-        # intact.
-        "sq8_topk_replay": q_sq8_topk_replay,
-        "contamination_gate_admitted": q_contamination_gate_admitted,
-        # round-10 addition: the five-stage curation composition
-        # (gopher -> exact dedup -> decontaminate -> calibrated gate
-        # -> token-budget mix) hash-checked END TO END as one query;
-        # quality_score demoted (string-chain coverage duplicated by
-        # language_id; the quality operator itself stays CI-checked).
-        "curation_e2e": q_curation_e2e,
-        # round-11 window rotation: the JVM-native BPE encoders take
-        # driver slots — bpe_encode_counts (round-10 flagship, CI-only
-        # until now) and the new bpe_encode_ids (tokenizer→shards id
-        # sequences). Demoted with oracles intact: rbo_termscan (rank-
-        # metric coverage duplicated by ndcg_termscan; mrr/map siblings
-        # already extras) and pass_at_k_orders (eval coverage
-        # duplicated by auc/ece/win_rate).
-        "bpe_encode_counts": q_bpe_encode_counts,
-        "bpe_encode_ids": q_bpe_encode_ids,
-        # round-12 window rotation: the set-similarity join, the PQ
-        # replay, the SemDeDup composition, and the REAL image-codec
-        # decode take driver slots. Demoted with oracles intact:
-        # cosine_topk (exact-cosine coverage duplicated by
-        # embedding_near_dups_exact + the lsh/ivf/sq8/pq replays),
-        # kmv_overlap_types (sketch coverage duplicated by
-        # approx_sketches), running_revenue (running-window coverage
-        # duplicated by trailing_revenue/cumulative_new_users), and
-        # tornqvist_prices (price-index coverage duplicated by
-        # chained_price_index/pricing_summary).
-        "jaccard_join": q_jaccard_join,
-        "pq_topk_replay": q_pq_topk_replay,
-        "semantic_dedup": q_semantic_dedup,
-        "multimodal_decode": q_multimodal_decode,
-        # --- non-SQL-expressible, rows-only by design (3) ---
-        # (the trained ivf_topk path moved to tests-only coverage when
-        # the oracle-backed iters=0 replay took its driver slot; its
-        # recall floor lives in tests/test_recall.py)
-        "approx_sketches": q_approx_sketches,
-        "lsh_cosine_topk": q_lsh_cosine_topk,
-        "embedding_near_dups": q_embedding_near_dups,
-    }
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6784,499 +6653,6 @@ FROM orders
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
-
-
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Queries retired from the driver-verdict window (see
-    :func:`queries`): near-duplicate TPC-H variants and operators whose
-    driver slot was consolidated (their operator coverage lives on in a
-    kept query or the pytest suite). All remain oracle-backed via
-    :func:`extra_oracle_sql`, checked in tests/test_extra_oracles.py,
-    and timed by bench.py."""
-    return {
-        # round-9 rotation demotions (oracles intact below)
-        "bloom_filtered_orders": q_bloom_filtered_orders,
-        "waiting_suppliers": q_waiting_suppliers,
-        "benford_prices": q_benford_prices,
-        # round-10 rotation demotions (oracles intact below)
-        "bpe_token_count": q_bpe_token_count,
-        "ks_returned_price": q_ks_returned_price,
-        "quality_score": q_quality_score,
-        # round-11 rotation demotions (oracles intact below)
-        "rbo_termscan": q_rbo_termscan,
-        "pass_at_k_orders": q_pass_at_k_orders,
-        "sum_columns": q_sum_columns,
-        "random_uniform_bounds": q_random_uniform_bounds,
-        "rollup_revenue": q_rollup_revenue,
-        "distinct_orderstatus": q_distinct_orderstatus,
-        "supplier_stats_per_nation": q_supplier_stats_per_nation,
-        "quantiles_exact": q_quantiles_exact,
-        "sliding_events": q_sliding_events,
-        "asof_forward_tolerance": q_asof_forward_tolerance,
-        "interarrival": q_interarrival,
-        "acctbal_quartiles": q_acctbal_quartiles,
-        "month_end_orders": q_month_end_orders,
-        "shipping_priority": q_shipping_priority,
-        "returned_customers": q_returned_customers,
-        "custdist": q_custdist,
-        "promo_revenue": q_promo_revenue,
-        "supplier_part_counts": q_supplier_part_counts,
-        "small_qty_revenue": q_small_qty_revenue,
-        "large_orders": q_large_orders,
-        "disjunctive_revenue": q_disjunctive_revenue,
-        "rich_inactive_customers": q_rich_inactive_customers,
-        "volume_shipping": q_volume_shipping,
-        "market_share": q_market_share,
-        "profit_by_nation_year": q_profit_by_nation_year,
-        "top_supplier": q_top_supplier,
-        "doc_fingerprint": q_doc_fingerprint,
-        "rolling_hash_fingerprint": q_rolling_hash_fingerprint,
-        "chunk_documents": q_chunk_documents,
-        "repetition_stats": q_repetition_stats,
-        "pii_redaction": q_pii_redaction,
-        "dedup_clusters": q_dedup_clusters,
-        "bm25_search": q_bm25_search,
-        "tfidf_terms": q_tfidf_terms,
-        "min_cost_supplier": q_min_cost_supplier,
-        "local_supplier_volume": q_local_supplier_volume,
-        "important_parts": q_important_parts,
-        "late_shipments": q_late_shipments,
-        "part_promotion_suppliers": q_part_promotion_suppliers,
-        "split_counts": q_split_counts,
-        "capped_sources": q_capped_sources,
-        "vocab_topk": q_vocab_topk,
-        "stratified_docs": q_stratified_docs,
-        "embedding_quantization": q_embedding_quantization,
-        "event_type_skew": q_event_type_skew,
-        "signup_funnel": q_signup_funnel,
-        "weekly_retention": q_weekly_retention,
-        "expectation_checks": q_expectation_checks,
-        "column_profile": q_column_profile,
-        "orders_frame_diff": q_orders_frame_diff,
-        "packed_sequences": q_packed_sequences,
-        "gap_filled_hourly": q_gap_filled_hourly,
-        "dedup_incremental": q_dedup_incremental,
-        "deterministic_shuffle": q_deterministic_shuffle,
-        "scd2_customer_bands": q_scd2_customer_bands,
-        "hourly_anomalies": q_hourly_anomalies,
-        "json_props_variant": q_json_props_variant,
-        "fuzzy_linkage": q_fuzzy_linkage,
-        "zorder_layout": q_zorder_layout,
-        "price_histogram": q_price_histogram,
-        "ewma_hourly": q_ewma_hourly,
-        "lm_quality": q_lm_quality,
-        "pagerank_parts": q_pagerank_parts,
-        "trend_by_event_type": q_trend_by_event_type,
-        "lineitem_correlations": q_lineitem_correlations,
-        "event_drift_weekend": q_event_drift_weekend,
-        "winsorized_acctbal": q_winsorized_acctbal,
-        "rfm_customers": q_rfm_customers,
-        "brand_cooccurrence": q_brand_cooccurrence,
-        "brand_triangles": q_brand_triangles,
-        "doc_boilerplate": q_doc_boilerplate,
-        "user_transitions": q_user_transitions,
-        "merged_pricing": q_merged_pricing,
-        "view_purchase_interval": q_view_purchase_interval,
-        "supplier_cells_sdc": q_supplier_cells_sdc,
-        "dominant_brand_suppliers": q_dominant_brand_suppliers,
-        "k_anon_customers": q_k_anon_customers,
-        "standardized_embeddings": q_standardized_embeddings,
-        "mixed_corpus": q_mixed_corpus,
-        "event_jsd": q_event_jsd,
-        "label_centroid_sims": q_label_centroid_sims,
-        "debounced_events": q_debounced_events,
-        "imputed_acctbal": q_imputed_acctbal,
-        "weighted_doc_sample": q_weighted_doc_sample,
-        "pii_column_scan": q_pii_column_scan,
-        "hist_quantile_prices": q_hist_quantile_prices,
-        "nearby_customers": q_nearby_customers,
-        "curation_pipeline": q_curation_pipeline,
-        "dedup_incremental_bloom": q_dedup_incremental_bloom,
-        "acf_daily": q_acf_daily,
-        "bpe_decode_roundtrip": q_bpe_decode_roundtrip,
-        # round-12 demotions from the declared window (oracles intact)
-        "cosine_topk": q_cosine_topk,
-        "kmv_overlap_types": q_kmv_overlap_types,
-        "running_revenue": q_running_revenue,
-        "tornqvist_prices": q_tornqvist_prices,
-        "split_leakage": q_split_leakage,
-        "nb_confusion": q_nb_confusion,
-        "source_entropy": q_source_entropy,
-        "cumulative_new_users": q_cumulative_new_users,
-        "hashed_features": q_hashed_features,
-        "hybrid_search": q_hybrid_search,
-        "orders_checksum": q_orders_checksum,
-        "nations_in_both": q_nations_in_both,
-        "struct_roundtrip": q_struct_roundtrip,
-        "json_props": q_json_props,
-        "row_index_orders": q_row_index_orders,
-        "bpe_merges": q_bpe_merges,
-        "acctbal_pct_rank": q_acctbal_pct_rank,
-        "order_total_outliers": q_order_total_outliers,
-        "hard_negatives": q_hard_negatives,
-        "negative_samples": q_negative_samples,
-        "cusum_daily": q_cusum_daily,
-        "pit_segment_revenue": q_pit_segment_revenue,
-        "quality_calibration": q_quality_calibration,
-        "term_keyness": q_term_keyness,
-        "top_paths": q_top_paths,
-        "cosine_histogram": q_cosine_histogram,
-        "dup_rate_by_source": q_dup_rate_by_source,
-        "user_value_twap": q_user_value_twap,
-        "purchase_attribution": q_purchase_attribution,
-        "containment_pairs": q_containment_pairs,
-        "seasonal_anomalies": q_seasonal_anomalies,
-        "growth_accounting": q_growth_accounting,
-        "rolling_mau": q_rolling_mau,
-        "label_noise": q_label_noise,
-        "ab_click_value": q_ab_click_value,
-        "cuped_values": q_cuped_values,
-        "supplier_name_typos": q_supplier_name_typos,
-        "funnel_latency": q_funnel_latency,
-        "brand_rules": q_brand_rules,
-        "value_change_points": q_value_change_points,
-        "post_stratified_acctbal": q_post_stratified_acctbal,
-        "ratio_estimate_revenue": q_ratio_estimate_revenue,
-        "seasonal_adjusted_daily": q_seasonal_adjusted_daily,
-        "price_indices": q_price_indices,
-        "acctbal_gini": q_acctbal_gini,
-        "brand_hhi": q_brand_hhi,
-        "acctbal_lorenz": q_acctbal_lorenz,
-        "chained_price_index": q_chained_price_index,
-        "survival_curve": q_survival_curve,
-        "weighted_price_quantiles": q_weighted_price_quantiles,
-        "url_dedup": q_url_dedup,
-        "domain_stats": q_domain_stats,
-        "part_communities": q_part_communities,
-        "leakage_safe_split": q_leakage_safe_split,
-        "jl_projection": q_jl_projection,
-        "brier_orders": q_brier_orders,
-        "silhouette_labels": q_silhouette_labels,
-        "psi_weekend_value": q_psi_weekend_value,
-        "chi2_qty_returns": q_chi2_qty_returns,
-        "mrr_termscan": q_mrr_termscan,
-        "map_termscan": q_map_termscan,
-        "kappa_order_flags": q_kappa_order_flags,
-        "kmv_users": q_kmv_users,
-        "entropy_daily_types": q_entropy_daily_types,
-        "mi_priority_status": q_mi_priority_status,
-        "embedding_drift_labels": q_embedding_drift_labels,
-        "weighted_docs_per_lang": q_weighted_docs_per_lang,
-        # retired from the driver window in the round-7 rotation
-        # (still oracle-checked here in CI):
-        "melt_lineitem": q_melt_lineitem,
-        "filter_events": q_filter_events,
-        "map_region_names": q_map_region_names,
-        "top_parts_per_brand": q_top_parts_per_brand,
-        "first_order_per_customer": q_first_order_per_customer,
-        "median_acctbal": q_median_acctbal,
-        "weighted_avg_acctbal": q_weighted_avg_acctbal,
-        "geometric_avg_price": q_geometric_avg_price,
-        "union_parties": q_union_parties,
-        "set_nulls_count": q_set_nulls_count,
-        "cumulative_qty": q_cumulative_qty,
-        "unpack_tokens": q_unpack_tokens,
-        "pivot_status": q_pivot_status,
-        "order_priority_check": q_order_priority_check,
-        "cube_revenue": q_cube_revenue,
-        "grouping_sets": q_grouping_sets,
-        "trailing_revenue": q_trailing_revenue,
-        "user_sessions": q_user_sessions,
-        "doc_stats": q_doc_stats,
-        "asof_purchase_signup": q_asof_purchase_signup,
-        "ngram_jaccard": q_ngram_jaccard,
-        "doc_fingerprints": q_doc_fingerprints,
-        "simhash_fingerprints": q_simhash_fingerprints,
-        "embedding_near_dups_exact": q_embedding_near_dups_exact,
-        "lsh_candidates": q_lsh_candidates,
-        "span_dedup": q_span_dedup,
-        "collocations": q_collocations,
-        "lm2_quality": q_lm2_quality,
-        # round-8 window rotation: the round-7 second half moved UP to
-        # the declared window; these eight long-stable declared entries
-        # (operator coverage duplicated by surviving declared siblings)
-        # moved down here, still CI-oracle-checked every run.
-        "dsir_select": q_dsir_select,
-        "doc_dedup_exact": q_doc_dedup_exact,
-        "customers_without_orders": q_customers_without_orders,
-        "normalized_text": q_normalized_text,
-        "multimodal_frames": q_multimodal_frames,
-        "events_hourly": q_events_hourly,
-        "attribution_purchases": q_attribution_purchases,
-        "psi_daily_value": q_psi_daily_value,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "revenue_by_nation": _ORACLE_REVENUE_BY_NATION,
-        "pricing_summary": _ORACLE_PRICING_SUMMARY,
-        "top_orders": _ORACLE_TOP_ORDERS,
-        "payload_dedup": _ORACLE_PAYLOAD_DEDUP,
-        "payload_near_dups": _ORACLE_PAYLOAD_NEAR_DUPS,
-        "dsir_weights": _ORACLE_DSIR_WEIGHTS,
-        "gopher_rules": _ORACLE_GOPHER_RULES,
-        "logreg_token_classifier": _oracle_logreg_token_classifier(256, 8, 1.0),
-        "substring_dedup": _ORACLE_SUBSTRING_DEDUP,
-        "cluster_best_dedup": _ORACLE_CLUSTER_BEST_DEDUP,
-        "pca_power_replay": _oracle_pca_power_replay(64, 2, 12, 6),
-        "range_join_events": _ORACLE_RANGE_JOIN_EVENTS,
-        "language_id": _ORACLE_LANGUAGE_ID,
-        "multimodal_meta": _ORACLE_MULTIMODAL_META,
-        "session_windows": _ORACLE_SESSION_WINDOWS,
-        "token_budget_mix": _ORACLE_TOKEN_BUDGET_MIX,
-        "auc_discount_returns": _ORACLE_AUC_DISCOUNT_RETURNS,
-        "ndcg_termscan": _ORACLE_NDCG_TERMSCAN,
-        "forecast_revenue": _ORACLE_FORECAST_REVENUE,
-        "decayed_event_value": _ORACLE_DECAYED_EVENT_VALUE,
-        "l_diversity_customers": _ORACLE_L_DIVERSITY_CUSTOMERS,
-        "isotonic_discount_returns": _ORACLE_ISOTONIC_DISCOUNT_RETURNS,
-        "platt_discount_returns": _oracle_platt_discount_returns(6, 2.0),
-        "woe_priority_fulfilled": _ORACLE_WOE_PRIORITY_FULFILLED,
-        "conformal_lang_threshold": _ORACLE_CONFORMAL_LANG_THRESHOLD,
-        "minhash_near_dedup": _oracle_minhash_near_dedup(),
-        "ivf_topk_replay": _ORACLE_IVF_TOPK_REPLAY,
-        "kmeans_cluster_profile": _ORACLE_KMEANS_CLUSTER_PROFILE,
-        "matryoshka_recall": _ORACLE_MATRYOSHKA_RECALL,
-        "ece_discount_returns": _ORACLE_ECE_DISCOUNT_RETURNS,
-        "brand_bt_ratings": _oracle_brand_bt_ratings(6),
-        "neyman_customer_sample": _ORACLE_NEYMAN_CUSTOMER_SAMPLE,
-        "zipf_tokens": _ORACLE_ZIPF_TOKENS,
-        "win_rate_brands": _oracle_win_rate_brands(0.05, 300),
-        "doremi_mix": _oracle_doremi_mix(6, 0.5),
-        "calibrated_gate_discounts": _ORACLE_CALIBRATED_GATE_DISCOUNTS,
-        "contamination_check": _ORACLE_CONTAMINATION_CHECK,
-        "acctbal_bootstrap_ci": _ORACLE_ACCTBAL_BOOTSTRAP_CI,
-        "sq8_topk_replay": _ORACLE_SQ8_TOPK_REPLAY,
-        "contamination_gate_admitted": _ORACLE_CONTAMINATION_GATE_ADMITTED,
-        "curation_e2e": _ORACLE_CURATION_E2E,
-        "bpe_encode_counts": _oracle_bpe_encode_counts(20),
-        "bpe_encode_ids": _oracle_bpe_encode_ids(20),
-        # approx_sketches: sketch estimates themselves are
-        # engine-specific (Spark HLL++ vs DuckDB HLL), so the query
-        # emits exact values + bounded-error flags and the oracle
-        # asserts exactness + the error contract via the hash gate.
-        "approx_sketches": _ORACLE_APPROX_SKETCHES,
-        # lsh_cosine_topk / embedding_near_dups: md5-derived Rademacher
-        # planes (plane_method="md5") make the full LSH pipeline —
-        # planes, buckets, candidates, rescoring, top-k — replayable in
-        # ANSI SQL; DuckDB regenerates the exact plane matrix.
-        "jaccard_join": _ORACLE_JACCARD_JOIN,
-        "pq_topk_replay": _ORACLE_PQ_TOPK_REPLAY,
-        "semantic_dedup": _ORACLE_SEMANTIC_DEDUP,
-        "multimodal_decode": _ORACLE_MULTIMODAL_DECODE,
-        "lsh_cosine_topk": _ORACLE_LSH_COSINE_TOPK,
-        "embedding_near_dups": _ORACLE_EMBEDDING_NEAR_DUPS,
-    }
-
-
-def extra_oracle_sql() -> dict[str, str]:
-    """Oracles for :func:`extra_queries` — same contract as
-    :func:`oracle_sql`, consumed by tests/test_extra_oracles.py and
-    tools/check_oracle.py."""
-    return {
-        "bloom_filtered_orders": _ORACLE_BLOOM_FILTERED_ORDERS,
-        "waiting_suppliers": _WAITING_SUPPLIERS_SQL,
-        "benford_prices": _ORACLE_BENFORD_PRICES,
-        "bpe_token_count": _ORACLE_BPE_TOKEN_COUNT,
-        "ks_returned_price": _ORACLE_KS_RETURNED_PRICE,
-        "quality_score": _ORACLE_QUALITY_SCORE,
-        "rbo_termscan": _oracle_rbo_termscan(),
-        "pass_at_k_orders": _ORACLE_PASS_AT_K_ORDERS,
-        "sum_columns": _ORACLE_SUM_COLUMNS,
-        "random_uniform_bounds": _ORACLE_RANDOM_UNIFORM_BOUNDS,
-        "rollup_revenue": _ORACLE_ROLLUP_REVENUE,
-        "distinct_orderstatus": _ORACLE_DISTINCT_ORDERSTATUS,
-        "supplier_stats_per_nation": _ORACLE_SUPPLIER_STATS_PER_NATION,
-        "quantiles_exact": _ORACLE_QUANTILES_EXACT,
-        "sliding_events": _ORACLE_SLIDING_EVENTS,
-        "asof_forward_tolerance": _ORACLE_ASOF_FORWARD_TOLERANCE,
-        "interarrival": _ORACLE_INTERARRIVAL,
-        "acctbal_quartiles": _ORACLE_ACCTBAL_QUARTILES,
-        "month_end_orders": _ORACLE_MONTH_END_ORDERS,
-        "shipping_priority": _ORACLE_SHIPPING_PRIORITY,
-        "returned_customers": _ORACLE_RETURNED_CUSTOMERS,
-        "custdist": _ORACLE_CUSTDIST,
-        "promo_revenue": _ORACLE_PROMO_REVENUE,
-        "supplier_part_counts": _ORACLE_SUPPLIER_PART_COUNTS,
-        "small_qty_revenue": _ORACLE_SMALL_QTY_REVENUE,
-        "large_orders": _ORACLE_LARGE_ORDERS,
-        "disjunctive_revenue": _ORACLE_DISJUNCTIVE_REVENUE,
-        "rich_inactive_customers": _ORACLE_RICH_INACTIVE_CUSTOMERS,
-        "volume_shipping": _ORACLE_VOLUME_SHIPPING,
-        "market_share": _ORACLE_MARKET_SHARE,
-        "profit_by_nation_year": _ORACLE_PROFIT_BY_NATION_YEAR,
-        "top_supplier": _ORACLE_TOP_SUPPLIER,
-        "doc_fingerprint": _ORACLE_DOC_FINGERPRINT,
-        "rolling_hash_fingerprint": _ORACLE_ROLLING_HASH_FINGERPRINT,
-        "chunk_documents": _ORACLE_CHUNK_DOCUMENTS,
-        "repetition_stats": _ORACLE_REPETITION_STATS,
-        "pii_redaction": _ORACLE_PII_REDACTION,
-        "dedup_clusters": _ORACLE_DEDUP_CLUSTERS,
-        "bm25_search": _ORACLE_BM25_SEARCH,
-        "tfidf_terms": _ORACLE_TFIDF_TERMS,
-        "min_cost_supplier": _ORACLE_MIN_COST_SUPPLIER,
-        "local_supplier_volume": _ORACLE_LOCAL_SUPPLIER_VOLUME,
-        "important_parts": _ORACLE_IMPORTANT_PARTS,
-        "late_shipments": _ORACLE_LATE_SHIPMENTS,
-        "part_promotion_suppliers": _ORACLE_PART_PROMOTION_SUPPLIERS,
-        "split_counts": _ORACLE_SPLIT_COUNTS,
-        "capped_sources": _ORACLE_CAPPED_SOURCES,
-        "vocab_topk": _ORACLE_VOCAB_TOPK,
-        "stratified_docs": _ORACLE_STRATIFIED_DOCS,
-        "embedding_quantization": _ORACLE_EMBEDDING_QUANTIZATION,
-        "event_type_skew": _ORACLE_EVENT_TYPE_SKEW,
-        "signup_funnel": _ORACLE_SIGNUP_FUNNEL,
-        "weekly_retention": _ORACLE_WEEKLY_RETENTION,
-        "expectation_checks": _ORACLE_EXPECTATION_CHECKS,
-        "column_profile": _ORACLE_COLUMN_PROFILE,
-        "orders_frame_diff": _ORACLE_ORDERS_FRAME_DIFF,
-        "packed_sequences": _ORACLE_PACKED_SEQUENCES,
-        "gap_filled_hourly": _ORACLE_GAP_FILLED_HOURLY,
-        "dedup_incremental": _ORACLE_DEDUP_INCREMENTAL,
-        "deterministic_shuffle": _ORACLE_DETERMINISTIC_SHUFFLE,
-        "scd2_customer_bands": _ORACLE_SCD2_CUSTOMER_BANDS,
-        "hourly_anomalies": _ORACLE_HOURLY_ANOMALIES,
-        "json_props_variant": _ORACLE_JSON_PROPS,
-        "fuzzy_linkage": _ORACLE_FUZZY_LINKAGE,
-        "zorder_layout": _oracle_zorder_layout(),
-        "price_histogram": _ORACLE_PRICE_HISTOGRAM,
-        "ewma_hourly": _oracle_ewma_hourly(),
-        "lm_quality": _ORACLE_LM_QUALITY,
-        "pagerank_parts": _oracle_pagerank_parts(),
-        "trend_by_event_type": _ORACLE_TREND_BY_EVENT_TYPE,
-        "lineitem_correlations": _ORACLE_LINEITEM_CORRELATIONS,
-        "event_drift_weekend": _ORACLE_EVENT_DRIFT_WEEKEND,
-        "winsorized_acctbal": _ORACLE_WINSORIZED_ACCTBAL,
-        "rfm_customers": _ORACLE_RFM_CUSTOMERS,
-        "brand_cooccurrence": _ORACLE_BRAND_COOCCURRENCE,
-        "brand_triangles": _ORACLE_BRAND_TRIANGLES,
-        "doc_boilerplate": _ORACLE_DOC_BOILERPLATE,
-        "user_transitions": _ORACLE_USER_TRANSITIONS,
-        "merged_pricing": _ORACLE_MERGED_PRICING,
-        "view_purchase_interval": _ORACLE_VIEW_PURCHASE_INTERVAL,
-        "supplier_cells_sdc": _ORACLE_SUPPLIER_CELLS_SDC,
-        "dominant_brand_suppliers": _ORACLE_DOMINANT_BRAND_SUPPLIERS,
-        "k_anon_customers": _ORACLE_K_ANON_CUSTOMERS,
-        "standardized_embeddings": _ORACLE_STANDARDIZED_EMBEDDINGS,
-        "mixed_corpus": _ORACLE_MIXED_CORPUS,
-        "event_jsd": _ORACLE_EVENT_JSD,
-        "label_centroid_sims": _ORACLE_LABEL_CENTROID_SIMS,
-        "debounced_events": _ORACLE_DEBOUNCED_EVENTS,
-        "imputed_acctbal": _ORACLE_IMPUTED_ACCTBAL,
-        "weighted_doc_sample": _ORACLE_WEIGHTED_DOC_SAMPLE,
-        "pii_column_scan": _ORACLE_PII_COLUMN_SCAN,
-        "hist_quantile_prices": _ORACLE_HIST_QUANTILE_PRICES,
-        "nearby_customers": _ORACLE_NEARBY_CUSTOMERS,
-        "curation_pipeline": _ORACLE_CURATION_PIPELINE,
-        "dedup_incremental_bloom": _ORACLE_DEDUP_INCREMENTAL,
-        "acf_daily": _ORACLE_ACF_DAILY,
-        "bpe_decode_roundtrip": _ORACLE_BPE_DECODE_ROUNDTRIP,
-        "cosine_topk": _ORACLE_COSINE_TOPK,
-        "kmv_overlap_types": _ORACLE_KMV_OVERLAP_TYPES,
-        "running_revenue": _ORACLE_RUNNING_REVENUE,
-        "tornqvist_prices": _ORACLE_TORNQVIST_PRICES,
-        "split_leakage": _ORACLE_SPLIT_LEAKAGE,
-        "nb_confusion": _ORACLE_NB_CONFUSION,
-        "source_entropy": _ORACLE_SOURCE_ENTROPY,
-        "cumulative_new_users": _ORACLE_CUMULATIVE_NEW_USERS,
-        "hashed_features": _ORACLE_HASHED_FEATURES,
-        "hybrid_search": _ORACLE_HYBRID_SEARCH,
-        "orders_checksum": _ORACLE_ORDERS_CHECKSUM,
-        "nations_in_both": _ORACLE_NATIONS_IN_BOTH,
-        "struct_roundtrip": _ORACLE_STRUCT_ROUNDTRIP,
-        "json_props": _ORACLE_JSON_PROPS,
-        "row_index_orders": _ORACLE_ROW_INDEX_ORDERS,
-        "acctbal_pct_rank": _ORACLE_ACCTBAL_PCT_RANK,
-        "order_total_outliers": _ORACLE_ORDER_TOTAL_OUTLIERS,
-        "hard_negatives": _ORACLE_HARD_NEGATIVES,
-        "negative_samples": _ORACLE_NEGATIVE_SAMPLES,
-        "cusum_daily": _ORACLE_CUSUM_DAILY,
-        "pit_segment_revenue": _ORACLE_PIT_SEGMENT_REVENUE,
-        "quality_calibration": _ORACLE_QUALITY_CALIBRATION,
-        "term_keyness": _ORACLE_TERM_KEYNESS,
-        "top_paths": _ORACLE_TOP_PATHS,
-        "cosine_histogram": _ORACLE_COSINE_HISTOGRAM,
-        "dup_rate_by_source": _ORACLE_DUP_RATE_BY_SOURCE,
-        "user_value_twap": _ORACLE_USER_VALUE_TWAP,
-        "purchase_attribution": _ORACLE_PURCHASE_ATTRIBUTION,
-        "containment_pairs": _ORACLE_CONTAINMENT_PAIRS,
-        "seasonal_anomalies": _ORACLE_SEASONAL_ANOMALIES,
-        "growth_accounting": _ORACLE_GROWTH_ACCOUNTING,
-        "rolling_mau": _ORACLE_ROLLING_MAU,
-        "label_noise": _ORACLE_LABEL_NOISE,
-        "ab_click_value": _ORACLE_AB_CLICK_VALUE,
-        "cuped_values": _ORACLE_CUPED_VALUES,
-        "supplier_name_typos": _ORACLE_SUPPLIER_NAME_TYPOS,
-        "funnel_latency": _ORACLE_FUNNEL_LATENCY,
-        "brand_rules": _ORACLE_BRAND_RULES,
-        "value_change_points": _ORACLE_VALUE_CHANGE_POINTS,
-        "post_stratified_acctbal": _ORACLE_POST_STRATIFIED_ACCTBAL,
-        "ratio_estimate_revenue": _ORACLE_RATIO_ESTIMATE_REVENUE,
-        "seasonal_adjusted_daily": _ORACLE_SEASONAL_ADJUSTED_DAILY,
-        "price_indices": _ORACLE_PRICE_INDICES,
-        "acctbal_gini": _ORACLE_ACCTBAL_GINI,
-        "brand_hhi": _ORACLE_BRAND_HHI,
-        "acctbal_lorenz": _ORACLE_ACCTBAL_LORENZ,
-        "chained_price_index": _ORACLE_CHAINED_PRICE_INDEX,
-        "survival_curve": _ORACLE_SURVIVAL_CURVE,
-        "weighted_price_quantiles": _ORACLE_WEIGHTED_PRICE_QUANTILES,
-        "url_dedup": _ORACLE_URL_DEDUP,
-        "domain_stats": _ORACLE_DOMAIN_STATS,
-        "part_communities": _oracle_part_communities(3),
-        "leakage_safe_split": _ORACLE_LEAKAGE_SAFE_SPLIT,
-        "bpe_merges": _oracle_bpe_merges(20),
-        "jl_projection": _ORACLE_JL_PROJECTION,
-        "brier_orders": _ORACLE_BRIER_ORDERS,
-        "silhouette_labels": _ORACLE_SILHOUETTE_LABELS,
-        "psi_weekend_value": _ORACLE_PSI_WEEKEND_VALUE,
-        "chi2_qty_returns": _ORACLE_CHI2_QTY_RETURNS,
-        "mrr_termscan": _ORACLE_MRR_TERMSCAN,
-        "map_termscan": _ORACLE_MAP_TERMSCAN,
-        "kappa_order_flags": _ORACLE_KAPPA_ORDER_FLAGS,
-        "kmv_users": _ORACLE_KMV_USERS,
-        "entropy_daily_types": _ORACLE_ENTROPY_DAILY_TYPES,
-        "mi_priority_status": _ORACLE_MI_PRIORITY_STATUS,
-        "embedding_drift_labels": _ORACLE_EMBEDDING_DRIFT_LABELS,
-        "weighted_docs_per_lang": _ORACLE_WEIGHTED_DOCS_PER_LANG,
-        # retired from the driver window in the round-7 rotation:
-        "melt_lineitem": _ORACLE_MELT_LINEITEM,
-        "filter_events": _ORACLE_FILTER_EVENTS,
-        "map_region_names": _ORACLE_MAP_REGION_NAMES,
-        "top_parts_per_brand": _ORACLE_TOP_PARTS_PER_BRAND,
-        "first_order_per_customer": _ORACLE_FIRST_ORDER_PER_CUSTOMER,
-        "median_acctbal": _ORACLE_MEDIAN_ACCTBAL,
-        "weighted_avg_acctbal": _ORACLE_WEIGHTED_AVG_ACCTBAL,
-        "geometric_avg_price": _ORACLE_GEOMETRIC_AVG_PRICE,
-        "union_parties": _ORACLE_UNION_PARTIES,
-        "set_nulls_count": _ORACLE_SET_NULLS_COUNT,
-        "cumulative_qty": _ORACLE_CUMULATIVE_QTY,
-        "unpack_tokens": _ORACLE_UNPACK_TOKENS,
-        "pivot_status": _ORACLE_PIVOT_STATUS,
-        "order_priority_check": _ORACLE_ORDER_PRIORITY_CHECK,
-        "cube_revenue": _ORACLE_CUBE_REVENUE,
-        "grouping_sets": _ORACLE_GROUPING_SETS,
-        "trailing_revenue": _ORACLE_TRAILING_REVENUE,
-        "user_sessions": _ORACLE_USER_SESSIONS,
-        "doc_stats": _ORACLE_DOC_STATS,
-        "asof_purchase_signup": _ORACLE_ASOF_PURCHASE_SIGNUP,
-        "ngram_jaccard": _ORACLE_NGRAM_JACCARD,
-        "doc_fingerprints": _ORACLE_DOC_FINGERPRINTS,
-        "simhash_fingerprints": _ORACLE_SIMHASH_FINGERPRINTS,
-        "embedding_near_dups_exact": _ORACLE_EMBEDDING_NEAR_DUPS_EXACT,
-        "lsh_candidates": _oracle_lsh_candidates(),
-        "span_dedup": _ORACLE_SPAN_DEDUP,
-        "collocations": _ORACLE_COLLOCATIONS,
-        "lm2_quality": _ORACLE_LM2_QUALITY,
-        "dsir_select": _ORACLE_DSIR_SELECT,
-        "doc_dedup_exact": _ORACLE_DOC_DEDUP_EXACT,
-        "customers_without_orders": _ORACLE_CUSTOMERS_WITHOUT_ORDERS,
-        "normalized_text": _ORACLE_NORMALIZED_TEXT,
-        "multimodal_frames": _ORACLE_MULTIMODAL_FRAMES,
-        "events_hourly": _ORACLE_EVENTS_HOURLY,
-        "attribution_purchases": _ORACLE_ATTRIBUTION_PURCHASES,
-        "psi_daily_value": _ORACLE_PSI_DAILY_VALUE,
-    }
 
 
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12522,3 +11898,298 @@ SELECT CAST(n AS BIGINT) AS n_terms,
             ELSE NULL END AS r2
 FROM s
 """
+
+
+# --------------------------------------------------------------------------
+# Query registry
+# --------------------------------------------------------------------------
+
+# One row per query: (query function, DuckDB oracle SQL). A query's name
+# is its function name without the ``q_`` prefix. The first
+# ``_DECLARED`` rows are the declared window (:func:`queries`), the rest
+# are :func:`extra_queries`; see :func:`queries` for the ordering
+# contract.
+_REGISTRY: tuple[tuple[Callable[[SparkSession, str], DataFrame], str], ...] = (
+    (q_revenue_by_nation, _ORACLE_REVENUE_BY_NATION),
+    (q_pricing_summary, _ORACLE_PRICING_SUMMARY),
+    (q_top_orders, _ORACLE_TOP_ORDERS),
+    (q_payload_dedup, _ORACLE_PAYLOAD_DEDUP),
+    (q_payload_near_dups, _ORACLE_PAYLOAD_NEAR_DUPS),
+    (q_dsir_weights, _ORACLE_DSIR_WEIGHTS),
+    (q_gopher_rules, _ORACLE_GOPHER_RULES),
+    (q_logreg_token_classifier, _oracle_logreg_token_classifier(256, 8, 1.0)),
+    (q_substring_dedup, _ORACLE_SUBSTRING_DEDUP),
+    (q_cluster_best_dedup, _ORACLE_CLUSTER_BEST_DEDUP),
+    (q_pca_power_replay, _oracle_pca_power_replay(64, 2, 12, 6)),
+    (q_range_join_events, _ORACLE_RANGE_JOIN_EVENTS),
+    (q_language_id, _ORACLE_LANGUAGE_ID),
+    (q_multimodal_meta, _ORACLE_MULTIMODAL_META),
+    (q_session_windows, _ORACLE_SESSION_WINDOWS),
+    (q_token_budget_mix, _ORACLE_TOKEN_BUDGET_MIX),
+    (q_auc_discount_returns, _ORACLE_AUC_DISCOUNT_RETURNS),
+    (q_ndcg_termscan, _ORACLE_NDCG_TERMSCAN),
+    (q_forecast_revenue, _ORACLE_FORECAST_REVENUE),
+    (q_decayed_event_value, _ORACLE_DECAYED_EVENT_VALUE),
+    (q_l_diversity_customers, _ORACLE_L_DIVERSITY_CUSTOMERS),
+    (q_isotonic_discount_returns, _ORACLE_ISOTONIC_DISCOUNT_RETURNS),
+    (q_platt_discount_returns, _oracle_platt_discount_returns(6, 2.0)),
+    (q_woe_priority_fulfilled, _ORACLE_WOE_PRIORITY_FULFILLED),
+    (q_conformal_lang_threshold, _ORACLE_CONFORMAL_LANG_THRESHOLD),
+    (q_minhash_near_dedup, _oracle_minhash_near_dedup()),
+    (q_ivf_topk_replay, _ORACLE_IVF_TOPK_REPLAY),
+    (q_kmeans_cluster_profile, _ORACLE_KMEANS_CLUSTER_PROFILE),
+    (q_matryoshka_recall, _ORACLE_MATRYOSHKA_RECALL),
+    (q_ece_discount_returns, _ORACLE_ECE_DISCOUNT_RETURNS),
+    (q_brand_bt_ratings, _oracle_brand_bt_ratings(6)),
+    (q_neyman_customer_sample, _ORACLE_NEYMAN_CUSTOMER_SAMPLE),
+    (q_zipf_tokens, _ORACLE_ZIPF_TOKENS),
+    (q_win_rate_brands, _oracle_win_rate_brands(0.05, 300)),
+    (q_doremi_mix, _oracle_doremi_mix(6, 0.5)),
+    (q_calibrated_gate_discounts, _ORACLE_CALIBRATED_GATE_DISCOUNTS),
+    (q_contamination_check, _ORACLE_CONTAMINATION_CHECK),
+    (q_acctbal_bootstrap_ci, _ORACLE_ACCTBAL_BOOTSTRAP_CI),
+    (q_sq8_topk_replay, _ORACLE_SQ8_TOPK_REPLAY),
+    (q_contamination_gate_admitted, _ORACLE_CONTAMINATION_GATE_ADMITTED),
+    (q_curation_e2e, _ORACLE_CURATION_E2E),
+    (q_bpe_encode_counts, _oracle_bpe_encode_counts(20)),
+    (q_bpe_encode_ids, _oracle_bpe_encode_ids(20)),
+    (q_jaccard_join, _ORACLE_JACCARD_JOIN),
+    (q_pq_topk_replay, _ORACLE_PQ_TOPK_REPLAY),
+    (q_semantic_dedup, _ORACLE_SEMANTIC_DEDUP),
+    (q_multimodal_decode, _ORACLE_MULTIMODAL_DECODE),
+    (q_approx_sketches, _ORACLE_APPROX_SKETCHES),
+    (q_lsh_cosine_topk, _ORACLE_LSH_COSINE_TOPK),
+    (q_embedding_near_dups, _ORACLE_EMBEDDING_NEAR_DUPS),
+    (q_bloom_filtered_orders, _ORACLE_BLOOM_FILTERED_ORDERS),
+    (q_waiting_suppliers, _WAITING_SUPPLIERS_SQL),
+    (q_benford_prices, _ORACLE_BENFORD_PRICES),
+    (q_bpe_token_count, _ORACLE_BPE_TOKEN_COUNT),
+    (q_ks_returned_price, _ORACLE_KS_RETURNED_PRICE),
+    (q_quality_score, _ORACLE_QUALITY_SCORE),
+    (q_rbo_termscan, _oracle_rbo_termscan()),
+    (q_pass_at_k_orders, _ORACLE_PASS_AT_K_ORDERS),
+    (q_sum_columns, _ORACLE_SUM_COLUMNS),
+    (q_random_uniform_bounds, _ORACLE_RANDOM_UNIFORM_BOUNDS),
+    (q_rollup_revenue, _ORACLE_ROLLUP_REVENUE),
+    (q_distinct_orderstatus, _ORACLE_DISTINCT_ORDERSTATUS),
+    (q_supplier_stats_per_nation, _ORACLE_SUPPLIER_STATS_PER_NATION),
+    (q_quantiles_exact, _ORACLE_QUANTILES_EXACT),
+    (q_sliding_events, _ORACLE_SLIDING_EVENTS),
+    (q_asof_forward_tolerance, _ORACLE_ASOF_FORWARD_TOLERANCE),
+    (q_interarrival, _ORACLE_INTERARRIVAL),
+    (q_acctbal_quartiles, _ORACLE_ACCTBAL_QUARTILES),
+    (q_month_end_orders, _ORACLE_MONTH_END_ORDERS),
+    (q_shipping_priority, _ORACLE_SHIPPING_PRIORITY),
+    (q_returned_customers, _ORACLE_RETURNED_CUSTOMERS),
+    (q_custdist, _ORACLE_CUSTDIST),
+    (q_promo_revenue, _ORACLE_PROMO_REVENUE),
+    (q_supplier_part_counts, _ORACLE_SUPPLIER_PART_COUNTS),
+    (q_small_qty_revenue, _ORACLE_SMALL_QTY_REVENUE),
+    (q_large_orders, _ORACLE_LARGE_ORDERS),
+    (q_disjunctive_revenue, _ORACLE_DISJUNCTIVE_REVENUE),
+    (q_rich_inactive_customers, _ORACLE_RICH_INACTIVE_CUSTOMERS),
+    (q_volume_shipping, _ORACLE_VOLUME_SHIPPING),
+    (q_market_share, _ORACLE_MARKET_SHARE),
+    (q_profit_by_nation_year, _ORACLE_PROFIT_BY_NATION_YEAR),
+    (q_top_supplier, _ORACLE_TOP_SUPPLIER),
+    (q_doc_fingerprint, _ORACLE_DOC_FINGERPRINT),
+    (q_rolling_hash_fingerprint, _ORACLE_ROLLING_HASH_FINGERPRINT),
+    (q_chunk_documents, _ORACLE_CHUNK_DOCUMENTS),
+    (q_repetition_stats, _ORACLE_REPETITION_STATS),
+    (q_pii_redaction, _ORACLE_PII_REDACTION),
+    (q_dedup_clusters, _ORACLE_DEDUP_CLUSTERS),
+    (q_bm25_search, _ORACLE_BM25_SEARCH),
+    (q_tfidf_terms, _ORACLE_TFIDF_TERMS),
+    (q_min_cost_supplier, _ORACLE_MIN_COST_SUPPLIER),
+    (q_local_supplier_volume, _ORACLE_LOCAL_SUPPLIER_VOLUME),
+    (q_important_parts, _ORACLE_IMPORTANT_PARTS),
+    (q_late_shipments, _ORACLE_LATE_SHIPMENTS),
+    (q_part_promotion_suppliers, _ORACLE_PART_PROMOTION_SUPPLIERS),
+    (q_split_counts, _ORACLE_SPLIT_COUNTS),
+    (q_capped_sources, _ORACLE_CAPPED_SOURCES),
+    (q_vocab_topk, _ORACLE_VOCAB_TOPK),
+    (q_stratified_docs, _ORACLE_STRATIFIED_DOCS),
+    (q_embedding_quantization, _ORACLE_EMBEDDING_QUANTIZATION),
+    (q_event_type_skew, _ORACLE_EVENT_TYPE_SKEW),
+    (q_signup_funnel, _ORACLE_SIGNUP_FUNNEL),
+    (q_weekly_retention, _ORACLE_WEEKLY_RETENTION),
+    (q_expectation_checks, _ORACLE_EXPECTATION_CHECKS),
+    (q_column_profile, _ORACLE_COLUMN_PROFILE),
+    (q_orders_frame_diff, _ORACLE_ORDERS_FRAME_DIFF),
+    (q_packed_sequences, _ORACLE_PACKED_SEQUENCES),
+    (q_gap_filled_hourly, _ORACLE_GAP_FILLED_HOURLY),
+    (q_dedup_incremental, _ORACLE_DEDUP_INCREMENTAL),
+    (q_deterministic_shuffle, _ORACLE_DETERMINISTIC_SHUFFLE),
+    (q_scd2_customer_bands, _ORACLE_SCD2_CUSTOMER_BANDS),
+    (q_hourly_anomalies, _ORACLE_HOURLY_ANOMALIES),
+    (q_json_props_variant, _ORACLE_JSON_PROPS),
+    (q_fuzzy_linkage, _ORACLE_FUZZY_LINKAGE),
+    (q_zorder_layout, _oracle_zorder_layout()),
+    (q_price_histogram, _ORACLE_PRICE_HISTOGRAM),
+    (q_ewma_hourly, _oracle_ewma_hourly()),
+    (q_lm_quality, _ORACLE_LM_QUALITY),
+    (q_pagerank_parts, _oracle_pagerank_parts()),
+    (q_trend_by_event_type, _ORACLE_TREND_BY_EVENT_TYPE),
+    (q_lineitem_correlations, _ORACLE_LINEITEM_CORRELATIONS),
+    (q_event_drift_weekend, _ORACLE_EVENT_DRIFT_WEEKEND),
+    (q_winsorized_acctbal, _ORACLE_WINSORIZED_ACCTBAL),
+    (q_rfm_customers, _ORACLE_RFM_CUSTOMERS),
+    (q_brand_cooccurrence, _ORACLE_BRAND_COOCCURRENCE),
+    (q_brand_triangles, _ORACLE_BRAND_TRIANGLES),
+    (q_doc_boilerplate, _ORACLE_DOC_BOILERPLATE),
+    (q_user_transitions, _ORACLE_USER_TRANSITIONS),
+    (q_merged_pricing, _ORACLE_MERGED_PRICING),
+    (q_view_purchase_interval, _ORACLE_VIEW_PURCHASE_INTERVAL),
+    (q_supplier_cells_sdc, _ORACLE_SUPPLIER_CELLS_SDC),
+    (q_dominant_brand_suppliers, _ORACLE_DOMINANT_BRAND_SUPPLIERS),
+    (q_k_anon_customers, _ORACLE_K_ANON_CUSTOMERS),
+    (q_standardized_embeddings, _ORACLE_STANDARDIZED_EMBEDDINGS),
+    (q_mixed_corpus, _ORACLE_MIXED_CORPUS),
+    (q_event_jsd, _ORACLE_EVENT_JSD),
+    (q_label_centroid_sims, _ORACLE_LABEL_CENTROID_SIMS),
+    (q_debounced_events, _ORACLE_DEBOUNCED_EVENTS),
+    (q_imputed_acctbal, _ORACLE_IMPUTED_ACCTBAL),
+    (q_weighted_doc_sample, _ORACLE_WEIGHTED_DOC_SAMPLE),
+    (q_pii_column_scan, _ORACLE_PII_COLUMN_SCAN),
+    (q_hist_quantile_prices, _ORACLE_HIST_QUANTILE_PRICES),
+    (q_nearby_customers, _ORACLE_NEARBY_CUSTOMERS),
+    (q_curation_pipeline, _ORACLE_CURATION_PIPELINE),
+    (q_dedup_incremental_bloom, _ORACLE_DEDUP_INCREMENTAL),
+    (q_acf_daily, _ORACLE_ACF_DAILY),
+    (q_bpe_decode_roundtrip, _ORACLE_BPE_DECODE_ROUNDTRIP),
+    (q_cosine_topk, _ORACLE_COSINE_TOPK),
+    (q_kmv_overlap_types, _ORACLE_KMV_OVERLAP_TYPES),
+    (q_running_revenue, _ORACLE_RUNNING_REVENUE),
+    (q_tornqvist_prices, _ORACLE_TORNQVIST_PRICES),
+    (q_split_leakage, _ORACLE_SPLIT_LEAKAGE),
+    (q_nb_confusion, _ORACLE_NB_CONFUSION),
+    (q_source_entropy, _ORACLE_SOURCE_ENTROPY),
+    (q_cumulative_new_users, _ORACLE_CUMULATIVE_NEW_USERS),
+    (q_hashed_features, _ORACLE_HASHED_FEATURES),
+    (q_hybrid_search, _ORACLE_HYBRID_SEARCH),
+    (q_orders_checksum, _ORACLE_ORDERS_CHECKSUM),
+    (q_nations_in_both, _ORACLE_NATIONS_IN_BOTH),
+    (q_struct_roundtrip, _ORACLE_STRUCT_ROUNDTRIP),
+    (q_json_props, _ORACLE_JSON_PROPS),
+    (q_row_index_orders, _ORACLE_ROW_INDEX_ORDERS),
+    (q_bpe_merges, _oracle_bpe_merges(20)),
+    (q_acctbal_pct_rank, _ORACLE_ACCTBAL_PCT_RANK),
+    (q_order_total_outliers, _ORACLE_ORDER_TOTAL_OUTLIERS),
+    (q_hard_negatives, _ORACLE_HARD_NEGATIVES),
+    (q_negative_samples, _ORACLE_NEGATIVE_SAMPLES),
+    (q_cusum_daily, _ORACLE_CUSUM_DAILY),
+    (q_pit_segment_revenue, _ORACLE_PIT_SEGMENT_REVENUE),
+    (q_quality_calibration, _ORACLE_QUALITY_CALIBRATION),
+    (q_term_keyness, _ORACLE_TERM_KEYNESS),
+    (q_top_paths, _ORACLE_TOP_PATHS),
+    (q_cosine_histogram, _ORACLE_COSINE_HISTOGRAM),
+    (q_dup_rate_by_source, _ORACLE_DUP_RATE_BY_SOURCE),
+    (q_user_value_twap, _ORACLE_USER_VALUE_TWAP),
+    (q_purchase_attribution, _ORACLE_PURCHASE_ATTRIBUTION),
+    (q_containment_pairs, _ORACLE_CONTAINMENT_PAIRS),
+    (q_seasonal_anomalies, _ORACLE_SEASONAL_ANOMALIES),
+    (q_growth_accounting, _ORACLE_GROWTH_ACCOUNTING),
+    (q_rolling_mau, _ORACLE_ROLLING_MAU),
+    (q_label_noise, _ORACLE_LABEL_NOISE),
+    (q_ab_click_value, _ORACLE_AB_CLICK_VALUE),
+    (q_cuped_values, _ORACLE_CUPED_VALUES),
+    (q_supplier_name_typos, _ORACLE_SUPPLIER_NAME_TYPOS),
+    (q_funnel_latency, _ORACLE_FUNNEL_LATENCY),
+    (q_brand_rules, _ORACLE_BRAND_RULES),
+    (q_value_change_points, _ORACLE_VALUE_CHANGE_POINTS),
+    (q_post_stratified_acctbal, _ORACLE_POST_STRATIFIED_ACCTBAL),
+    (q_ratio_estimate_revenue, _ORACLE_RATIO_ESTIMATE_REVENUE),
+    (q_seasonal_adjusted_daily, _ORACLE_SEASONAL_ADJUSTED_DAILY),
+    (q_price_indices, _ORACLE_PRICE_INDICES),
+    (q_acctbal_gini, _ORACLE_ACCTBAL_GINI),
+    (q_brand_hhi, _ORACLE_BRAND_HHI),
+    (q_acctbal_lorenz, _ORACLE_ACCTBAL_LORENZ),
+    (q_chained_price_index, _ORACLE_CHAINED_PRICE_INDEX),
+    (q_survival_curve, _ORACLE_SURVIVAL_CURVE),
+    (q_weighted_price_quantiles, _ORACLE_WEIGHTED_PRICE_QUANTILES),
+    (q_url_dedup, _ORACLE_URL_DEDUP),
+    (q_domain_stats, _ORACLE_DOMAIN_STATS),
+    (q_part_communities, _oracle_part_communities(3)),
+    (q_leakage_safe_split, _ORACLE_LEAKAGE_SAFE_SPLIT),
+    (q_jl_projection, _ORACLE_JL_PROJECTION),
+    (q_brier_orders, _ORACLE_BRIER_ORDERS),
+    (q_silhouette_labels, _ORACLE_SILHOUETTE_LABELS),
+    (q_psi_weekend_value, _ORACLE_PSI_WEEKEND_VALUE),
+    (q_chi2_qty_returns, _ORACLE_CHI2_QTY_RETURNS),
+    (q_mrr_termscan, _ORACLE_MRR_TERMSCAN),
+    (q_map_termscan, _ORACLE_MAP_TERMSCAN),
+    (q_kappa_order_flags, _ORACLE_KAPPA_ORDER_FLAGS),
+    (q_kmv_users, _ORACLE_KMV_USERS),
+    (q_entropy_daily_types, _ORACLE_ENTROPY_DAILY_TYPES),
+    (q_mi_priority_status, _ORACLE_MI_PRIORITY_STATUS),
+    (q_embedding_drift_labels, _ORACLE_EMBEDDING_DRIFT_LABELS),
+    (q_weighted_docs_per_lang, _ORACLE_WEIGHTED_DOCS_PER_LANG),
+    (q_melt_lineitem, _ORACLE_MELT_LINEITEM),
+    (q_filter_events, _ORACLE_FILTER_EVENTS),
+    (q_map_region_names, _ORACLE_MAP_REGION_NAMES),
+    (q_top_parts_per_brand, _ORACLE_TOP_PARTS_PER_BRAND),
+    (q_first_order_per_customer, _ORACLE_FIRST_ORDER_PER_CUSTOMER),
+    (q_median_acctbal, _ORACLE_MEDIAN_ACCTBAL),
+    (q_weighted_avg_acctbal, _ORACLE_WEIGHTED_AVG_ACCTBAL),
+    (q_geometric_avg_price, _ORACLE_GEOMETRIC_AVG_PRICE),
+    (q_union_parties, _ORACLE_UNION_PARTIES),
+    (q_set_nulls_count, _ORACLE_SET_NULLS_COUNT),
+    (q_cumulative_qty, _ORACLE_CUMULATIVE_QTY),
+    (q_unpack_tokens, _ORACLE_UNPACK_TOKENS),
+    (q_pivot_status, _ORACLE_PIVOT_STATUS),
+    (q_order_priority_check, _ORACLE_ORDER_PRIORITY_CHECK),
+    (q_cube_revenue, _ORACLE_CUBE_REVENUE),
+    (q_grouping_sets, _ORACLE_GROUPING_SETS),
+    (q_trailing_revenue, _ORACLE_TRAILING_REVENUE),
+    (q_user_sessions, _ORACLE_USER_SESSIONS),
+    (q_doc_stats, _ORACLE_DOC_STATS),
+    (q_asof_purchase_signup, _ORACLE_ASOF_PURCHASE_SIGNUP),
+    (q_ngram_jaccard, _ORACLE_NGRAM_JACCARD),
+    (q_doc_fingerprints, _ORACLE_DOC_FINGERPRINTS),
+    (q_simhash_fingerprints, _ORACLE_SIMHASH_FINGERPRINTS),
+    (q_embedding_near_dups_exact, _ORACLE_EMBEDDING_NEAR_DUPS_EXACT),
+    (q_lsh_candidates, _oracle_lsh_candidates()),
+    (q_span_dedup, _ORACLE_SPAN_DEDUP),
+    (q_collocations, _ORACLE_COLLOCATIONS),
+    (q_lm2_quality, _ORACLE_LM2_QUALITY),
+    (q_dsir_select, _ORACLE_DSIR_SELECT),
+    (q_doc_dedup_exact, _ORACLE_DOC_DEDUP_EXACT),
+    (q_customers_without_orders, _ORACLE_CUSTOMERS_WITHOUT_ORDERS),
+    (q_normalized_text, _ORACLE_NORMALIZED_TEXT),
+    (q_multimodal_frames, _ORACLE_MULTIMODAL_FRAMES),
+    (q_events_hourly, _ORACLE_EVENTS_HOURLY),
+    (q_attribution_purchases, _ORACLE_ATTRIBUTION_PURCHASES),
+    (q_psi_daily_value, _ORACLE_PSI_DAILY_VALUE),
+)
+_DECLARED = 50
+
+
+def _name(fn: Callable[[SparkSession, str], DataFrame]) -> str:
+    return fn.__name__.removeprefix("q_")
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Declared registry: the first ``_DECLARED`` (50) rows of
+    ``_REGISTRY``. The cap exists because the external correctness
+    check gives a verdict to only the first 50 declared queries; a
+    longer window would leave the rest with no verdict. Ordering contract:
+    deterministic exact-replay oracles first, the sketch/LSH queries
+    whose oracles replay md5-derived randomness last, so a count-capped
+    checker always verifies the strongest evidence first."""
+    return {_name(fn): fn for fn, _ in _REGISTRY[:_DECLARED]}
+
+
+def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The rows after the declared window: oracle-checked in
+    tests/test_extra_oracles.py and timed by bench.py."""
+    return {_name(fn): fn for fn, _ in _REGISTRY[_DECLARED:]}
+
+
+def oracle_sql() -> dict[str, str]:
+    """DuckDB oracle SQL for each :func:`queries` entry."""
+    return {_name(fn): sql for fn, sql in _REGISTRY[:_DECLARED]}
+
+
+def extra_oracle_sql() -> dict[str, str]:
+    """DuckDB oracle SQL for each :func:`extra_queries` entry."""
+    return {_name(fn): sql for fn, sql in _REGISTRY[_DECLARED:]}

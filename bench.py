@@ -78,9 +78,6 @@ def _restore_stderr_and_dump_tail():
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
-
     jvm_log = _redirect_stderr_to_log()
 
     def _warnings_since(pos: int) -> tuple[int, int]:
@@ -92,49 +89,8 @@ def main() -> None:
             return fh.read(end - pos).count(_WINDOW_WARNING), end
 
     import __spark_entry__ as entrymod
-    from rdsa_utils_spark.session import create_spark_session
 
-    spark = create_spark_session(
-        "rdsa-utils-spark-bench",
-        size="local",
-        extra_configs={"spark.ui.showConsoleProgress": "false"},
-    )
-
-    # Warm-up: trigger JVM init, codegen compiler, Arrow, and the
-    # Python-worker pool once so the first timed query isn't billed
-    # for session startup.
-    warm = spark.range(1000).selectExpr("sum(id) as s")
-    warm.write.format("noop").mode("overwrite").save()
-    spark.read.parquet(f"{sf_dir}/region.parquet").write.format("noop").mode("overwrite").save()
-    # Spawn the Arrow python-worker pool (first pandas UDF otherwise
-    # bills ~3s of fork+import to whichever query hits it first).
-    from pyspark.sql import functions as F
-
-    # lambda form: `from __future__ import annotations` stringifies
-    # type hints, which pandas_udf's hint inference can't resolve here
-    _warm_udf = F.pandas_udf(lambda x: x, "long")
-    spark.range(0, 64, 1, int(cpus)).select(_warm_udf(F.col("id"))).write.format(
-        "noop",
-    ).mode("overwrite").save()
-    # The FIRST Arrow UDF returning an array type pays a further one-off
-    # ~3s (measured: 3.8s first pass vs 0.7s steady-state for the same
-    # plan) — warm that path too, plus the first localCheckpoint, so
-    # per-query timings reflect steady-state operator cost rather than
-    # whichever query happens to initialize the machinery.
-    _warm_arr = F.pandas_udf(lambda x: x.map(lambda v: [v]), "array<long>")
-    spark.range(0, 64, 1, int(cpus)).select(_warm_arr(F.col("id"))).write.format(
-        "noop",
-    ).mode("overwrite").save()
-    spark.range(64).localCheckpoint(eager=True).write.format("noop").mode("overwrite").save()
-    # Warm whole-stage-codegen for the join/agg operator pair on the
-    # two tiny dimension tables, so the first real query's timing is
-    # operator cost, not one-off JIT compilation of HashAggregate /
-    # BroadcastHashJoin (measured ~1-2s on the first join+agg plan).
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey).groupBy(
-        "r_name",
-    ).count().write.format("noop").mode("overwrite").save()
+    spark = warm_session("rdsa-utils-spark-bench", sf_dir)
 
     # Bench the full surface: the driver-declared registry (capped at
     # 50 so every entry gets a correctness verdict) PLUS the retired
@@ -279,18 +235,65 @@ def main() -> None:
     )
 
 
+def warm_session(app_name: str, sf_dir: str):
+    """Build the local bench session on local[$SPARK_GRAFT_CPUS] and
+    warm it, so the first timed query isn't billed for session
+    startup: JVM init, the codegen compiler, Arrow and the Python-worker
+    pool, the first array-returning Arrow UDF, the first
+    localCheckpoint, and join/agg whole-stage codegen on ``sf_dir``'s
+    two tiny dimension tables. Every lane and tool that times queries
+    uses this one session recipe."""
+    cpus = int(os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
+
+    from pyspark.sql import functions as F
+
+    from rdsa_utils_spark.session import create_spark_session
+
+    spark = create_spark_session(
+        app_name,
+        size="local",
+        extra_configs={"spark.ui.showConsoleProgress": "false"},
+    )
+
+    def _noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    _noop(spark.range(1000).selectExpr("sum(id) as s"))
+    _noop(spark.read.parquet(f"{sf_dir}/region.parquet"))
+    # Spawn the Arrow python-worker pool (first pandas UDF otherwise
+    # bills ~3s of fork+import to whichever query hits it first).
+    # lambda form: `from __future__ import annotations` stringifies
+    # type hints, which pandas_udf's hint inference can't resolve here
+    _warm_udf = F.pandas_udf(lambda x: x, "long")
+    _noop(spark.range(0, 64, 1, cpus).select(_warm_udf(F.col("id"))))
+    # The FIRST Arrow UDF returning an array type pays a further one-off
+    # ~3s (measured: 3.8s first pass vs 0.7s steady-state for the same
+    # plan) — warm that path too, plus the first localCheckpoint, so
+    # per-query timings reflect steady-state operator cost rather than
+    # whichever query happens to initialize the machinery.
+    _warm_arr = F.pandas_udf(lambda x: x.map(lambda v: [v]), "array<long>")
+    _noop(spark.range(0, 64, 1, cpus).select(_warm_arr(F.col("id"))))
+    _noop(spark.range(64).localCheckpoint(eager=True))
+    # Warm whole-stage-codegen for the join/agg operator pair on the
+    # two tiny dimension tables, so the first real query's timing is
+    # operator cost, not one-off JIT compilation of HashAggregate /
+    # BroadcastHashJoin (measured ~1-2s on the first join+agg plan).
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    _noop(nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+          .groupBy("r_name").count())
+    return spark
+
+
 def _isolate(names: list[str]) -> None:
     """Fresh-session-per-query lane: stop/recreate the SparkSession
     around every named query so its timings carry no cross-query
     cache/JIT/shuffle state, and keep N ≥ 5 runs for a trustworthy
     median. Merges into BENCH_DETAIL.json under ``"isolated"``."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
     _redirect_stderr_to_log()
 
     import __spark_entry__ as entrymod
-    from rdsa_utils_spark.session import create_spark_session
 
     qs = {**entrymod.queries(), **entrymod.extra_queries()}
     unknown = [n for n in names if n not in qs]
@@ -300,21 +303,7 @@ def _isolate(names: list[str]) -> None:
 
     results: dict[str, dict] = {}
     for name in names:
-        spark = create_spark_session(
-            "rdsa-utils-spark-bench-isolated",
-            size="local",
-            extra_configs={"spark.ui.showConsoleProgress": "false"},
-        )
-        # per-session warmup: JVM/codegen/Arrow pool, as in the main lane
-        from pyspark.sql import functions as F
-
-        spark.range(1000).selectExpr("sum(id) s").write.format("noop").mode(
-            "overwrite",
-        ).save()
-        _warm_udf = F.pandas_udf(lambda x: x, "long")
-        spark.range(0, 64, 1, int(cpus)).select(_warm_udf(F.col("id"))).write.format(
-            "noop",
-        ).mode("overwrite").save()
+        spark = warm_session("rdsa-utils-spark-bench-isolated", sf_dir)
         runs = []
         for i in range(n_runs + 1):
             t0 = time.perf_counter()

@@ -11,6 +11,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rdsa_utils_spark.session import create_spark_session  # noqa: E402
+from tools.check_oracle import _rows_key  # noqa: E402
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -31,6 +32,37 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+@pytest.fixture(scope="session")
+def duck(sf_dir):
+    """DuckDB connection with one view per fixture table, for oracles."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in [
+        "region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings",
+    ]:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')",
+        )
+    yield con
+    con.close()
+
+
+def assert_matches_oracle(sdf, duck, sql):
+    """The oracle gate's compare (``tools/check_oracle.py``): column
+    names, row count, and an order-insensitive value comparison
+    against the DuckDB result."""
+    spark_cols = sdf.columns
+    spark_rows = [tuple(r) for r in sdf.collect()]
+    duck_res = duck.execute(sql)
+    duck_cols = [d[0] for d in duck_res.description]
+    duck_rows = duck_res.fetchall()
+    assert sorted(spark_cols) == sorted(duck_cols)
+    assert len(spark_rows) == len(duck_rows)
+    assert _rows_key(spark_rows, spark_cols) == _rows_key(duck_rows, duck_cols)
 
 
 def assert_df_equal(actual, expected, sort_cols=None, approx=None):

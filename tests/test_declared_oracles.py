@@ -4,75 +4,18 @@ against its DuckDB oracles in pytest, at sf0.001 — the same compare
 
 The driver verifies these at sf0.01 per round, but only per round:
 without this module a refactor could break a declared query and
-pytest would stay green until the next driver pass. Rows-only
-declared queries (no oracle by design) are smoke-checked to run and
-return a stable, non-degenerate frame.
+pytest would stay green until the next external check.
 """
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 import __spark_entry__ as entrymod
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
+from tests.conftest import assert_matches_oracle
 
 
-def _rows_key(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
-
-
-@pytest.fixture(scope="module")
-def duck():
-    import duckdb
-
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')",
-        )
-    yield con
-    con.close()
-
-
-_ORACLED = sorted(entrymod.oracle_sql())
-_ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
-
-
-@pytest.mark.parametrize("name", _ORACLED)
-def test_declared_query_matches_oracle(spark, duck, name):
-    sdf = entrymod.queries()[name](spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    duck_res = duck.execute(entrymod.oracle_sql()[name])
-    duck_cols = [d[0] for d in duck_res.description]
-    duck_rows = duck_res.fetchall()
-    assert sorted(spark_cols) == sorted(duck_cols)
-    assert len(spark_rows) == len(duck_rows)
-    assert _rows_key(spark_rows, spark_cols) == _rows_key(duck_rows, duck_cols)
-
-
-@pytest.mark.parametrize("name", _ROWS_ONLY)
-def test_rows_only_query_runs(spark, name):
-    sdf = entrymod.queries()[name](spark, SF_DIR)
-    rows = sdf.collect()
-    assert sdf.columns, f"{name}: no columns"
-    assert rows is not None
+@pytest.mark.parametrize("name", sorted(entrymod.oracle_sql()))
+def test_declared_query_matches_oracle(spark, duck, sf_dir, name):
+    sdf = entrymod.queries()[name](spark, sf_dir)
+    assert_matches_oracle(sdf, duck, entrymod.oracle_sql()[name])

@@ -11,116 +11,49 @@ operator.
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 import __spark_entry__ as entrymod
-
-SF_DIR = "/root/testdata/sf0.001"
-
-#: Extras with no SQL-expressible oracle (documented rows-only tier —
-#: same category as the declared registry's rows-only tail). Each MUST
-#: have its correctness asserted elsewhere; cite the test here.
-#: EMPTY since round 8: `embedding_pca` (rows-only for four rounds —
-#: driver-side LAPACK eigh) was retired from the registry in favor of
-#: its oracle-backed sibling `pca_power_replay`; the pca_train/
-#: pca_project OPERATORS remain covered by the variance==eigenvalue
-#: identity + numpy replay in tests/test_round4_third.py.
-#: bpe_merges left this tier in round 6: its oracle unrolls all 20
-#: merge rounds in SQL (greedy fold == string replace on a
-#: separator-delimited symbol string).
-ROWS_ONLY_EXTRAS: set[str] = set()
-
-
-def _norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def _rows_key(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
-
-
-@pytest.fixture(scope="module")
-def duck():
-    import duckdb
-
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')",
-        )
-    yield con
-    con.close()
+from tests.conftest import assert_matches_oracle
 
 
 def test_registry_contract():
-    """Driver window invariants: ≤50 declared queries (the driver
-    verdicts exactly 50), oracle-backed ones strictly before the
-    rows-only tail, extras disjoint and fully oracle-backed."""
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    extras = entrymod.extra_queries()
-    extra_oracles = entrymod.extra_oracle_sql()
-    assert len(qs) <= 50
-    assert set(oracles) <= set(qs)
-    flags = [name in oracles for name in qs]
-    assert flags == sorted(flags, reverse=True), (
-        "oracle-backed queries must precede rows-only ones in registry order"
-    )
-    assert not (set(qs) & set(extras))
-    assert set(extras) - set(extra_oracles) == ROWS_ONLY_EXTRAS
-    assert set(extra_oracles) <= set(extras)
+    """The registry table is the only registry: exactly 50 declared
+    queries (the correctness check verdicts the first 50), no name twice (a
+    duplicate would silently collapse in the dict views), a non-empty
+    oracle on every row, and every module-level ``q_*`` function
+    registered under its own name."""
+    names = [entrymod._name(fn) for fn, _ in entrymod._REGISTRY]
+    assert len(entrymod.queries()) == 50
+    dupes = sorted({n for n in names if names.count(n) > 1})
+    assert not dupes, f"registered twice: {dupes}"
+    empty = [n for n, (_, sql) in zip(names, entrymod._REGISTRY)
+             if not isinstance(sql, str) or not sql.strip()]
+    assert not empty, f"empty oracle: {empty}"
+    defined = {
+        k.removeprefix("q_"): v for k, v in vars(entrymod).items()
+        if k.startswith("q_") and callable(v)
+    }
+    assert sorted(set(defined) - set(names)) == [], "q_* function not in the table"
+    assert all(defined.get(n) is fn for n, (fn, _) in zip(names, entrymod._REGISTRY))
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.extra_queries()))
-def test_extra_query_matches_oracle(spark, duck, name):
-    if name in ROWS_ONLY_EXTRAS:
-        fn = entrymod.extra_queries()[name]
-        assert fn(spark, SF_DIR).count() >= 0  # runs; values checked elsewhere
-        return
-    fn = entrymod.extra_queries()[name]
-    sql = entrymod.extra_oracle_sql()[name]
-    sdf = fn(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    duck_res = duck.execute(sql)
-    duck_cols = [d[0] for d in duck_res.description]
-    duck_rows = duck_res.fetchall()
-    assert sorted(spark_cols) == sorted(duck_cols)
-    assert len(spark_rows) == len(duck_rows)
-    assert _rows_key(spark_rows, spark_cols) == _rows_key(duck_rows, duck_cols)
+def test_extra_query_matches_oracle(spark, duck, sf_dir, name):
+    sdf = entrymod.extra_queries()[name](spark, sf_dir)
+    assert_matches_oracle(sdf, duck, entrymod.extra_oracle_sql()[name])
 
 
 def test_parity_rows_stay_oracle_checked():
     """Window-rotation invariant: every query name cited in PARITY.md's
-    Query column must still resolve in queries() or extra_queries(),
-    and must be oracle-backed in its tier unless PARITY explicitly
-    marks it *rows-only* (in which case it must be a documented
-    rows-only entry, not a silently orphaned one). A driver-window
-    rotation that drops or un-verifies an operator's query fails here."""
+    Query column must still resolve in queries() or extra_queries()
+    (every registered query carries an oracle; see
+    test_registry_contract). A window rotation that drops an
+    operator's query fails here."""
     import re
     from pathlib import Path
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    extras = entrymod.extra_queries()
-    extra_oracles = entrymod.extra_oracle_sql()
-    all_names = set(qs) | set(extras)
-    oracle_backed = set(oracles) | set(extra_oracles)
-    declared_rows_only = set(qs) - set(oracles)
+    all_names = set(entrymod.queries()) | set(entrymod.extra_queries())
 
     text = Path(__file__).resolve().parent.parent.joinpath("PARITY.md").read_text()
     problems = []
@@ -143,16 +76,9 @@ def test_parity_rows_stay_oracle_checked():
         qcell = cells[-1]
         if qcell in ("—", ""):
             continue
-        rows_only_marked = "rows-only" in qcell
         for name in re.findall(r"`([a-z0-9_]+)`", qcell):
             cited.add(name)
             if name not in all_names:
                 problems.append(f"{name}: cited in PARITY.md but in neither tier")
-            elif name not in oracle_backed:
-                if not (rows_only_marked or name in ROWS_ONLY_EXTRAS
-                        or name in declared_rows_only):
-                    problems.append(
-                        f"{name}: lost its oracle without a rows-only marker",
-                    )
     assert len(cited) > 50, "PARITY.md Query column parse found too few names"
     assert not problems, "\n".join(problems)

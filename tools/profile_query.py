@@ -49,8 +49,6 @@ def _store_totals(spark):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
 
     args = sys.argv[1:]
     runs = 3
@@ -71,7 +69,7 @@ def main() -> None:
             i += 1
 
     import __spark_entry__ as entrymod
-    from rdsa_utils_spark.session import create_spark_session
+    from bench import warm_session
 
     qs = {**entrymod.queries(), **entrymod.extra_queries()}
     if top:
@@ -84,19 +82,7 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
-    spark = create_spark_session(
-        "profile-query", size="local",
-        extra_configs={"spark.ui.showConsoleProgress": "false"},
-    )
-    from pyspark.sql import functions as F
-
-    # same warmups as bench.py
-    spark.range(1000).selectExpr("sum(id) s").write.format("noop").mode("overwrite").save()
-    _wu = F.pandas_udf(lambda x: x, "long")
-    spark.range(0, 64, 1, int(cpus)).select(_wu(F.col("id"))).write.format("noop").mode("overwrite").save()
-    _wa = F.pandas_udf(lambda x: x.map(lambda v: [v]), "array<long>")
-    spark.range(0, 64, 1, int(cpus)).select(_wa(F.col("id"))).write.format("noop").mode("overwrite").save()
-    spark.range(64).localCheckpoint(eager=True).write.format("noop").mode("overwrite").save()
+    spark = warm_session("profile-query", sf_dir)
 
     out = {}
     for name in names:

@@ -34,7 +34,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_LOCAL_DRIVER_MEM", "48g")
 
     import __spark_entry__ as entrymod
-    from rdsa_utils_spark.session import create_spark_session
+    from bench import warm_session
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     detail = json.load(open(os.path.join(repo, "BENCH_DETAIL.json")))
@@ -49,16 +49,7 @@ def main() -> None:
             points.append((d, float(name.replace("sf", ""))))
     points.sort(key=lambda p: p[1])
 
-    spark = create_spark_session(
-        "scale-probe", size="local",
-        extra_configs={"spark.ui.showConsoleProgress": "false"},
-    )
-    # Warm: JVM, codegen, Arrow workers (mirrors bench.py).
-    from pyspark.sql import functions as F
-
-    spark.range(1000).selectExpr("sum(id) s").write.format("noop").mode("overwrite").save()
-    _warm = F.pandas_udf(lambda x: x, "long")
-    spark.range(0, 64, 1, 8).select(_warm(F.col("id"))).write.format("noop").mode("overwrite").save()
+    spark = warm_session("scale-probe", points[0][0])
 
     results: dict[str, dict] = {}
     for qname in top:
