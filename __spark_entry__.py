@@ -38,6 +38,7 @@ from rdsa_utils_spark.operators.windows import (
     get_window_spec,
     top_k_per_group,
 )
+from rdsa_utils_spark.plans.tuning import ensure_parallelism, pin
 from rdsa_utils_spark.sources.readers import read_parquet
 from rdsa_utils_spark.streaming.windows_time import (
     sessionize_by_gap,
@@ -51,7 +52,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
-def _spread(df: DataFrame, *keys: str, parts: int | None = None) -> DataFrame:
+def _spread(df: DataFrame, *keys: str) -> DataFrame:
     """Parallelism floor for compute-heavy work downstream of a
     low-parallelism scan (guide §2.5's unsplittable-input remedy:
     "repartition immediately after the read"). The test fixtures are
@@ -61,18 +62,14 @@ def _spread(df: DataFrame, *keys: str, parts: int | None = None) -> DataFrame:
     rest idle. Hash-repartitioning on a high-cardinality key spreads
     that work across the session's cores.
 
-    Scale-adaptive by construction, not a local[32] constant: the
-    target is the session's default parallelism (i.e. the driver's
-    $SPARK_GRAFT_CPUS locally, the executor-core total on a cluster),
-    and when the scan already yields at least that many partitions —
-    the 100 TB case, where inputs split into thousands of tasks — this
-    is a NO-OP with zero added shuffle. Hash (not round-robin)
+    :func:`~rdsa_utils_spark.plans.tuning.ensure_parallelism` picks the
+    target from the plan's size and the session's cores; when the scan
+    already yields that many partitions — the 100 TB case — this is a
+    NO-OP with zero added shuffle. Hash (not round-robin)
     repartitioning keeps the exchange deterministic and skips the
     sort-before-repartition pass.
     """
-    from rdsa_utils_spark.plans.tuning import ensure_parallelism
-
-    return ensure_parallelism(df, min_partitions=parts, keys=keys)
+    return ensure_parallelism(df, keys=keys)
 
 
 def _dsum(col, alias: str):
@@ -3388,7 +3385,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # offers feeds both the per-part MIN and the final join; without
         # materialization the 5-way join + aggregate subtree runs twice.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     min_price = offers.groupBy("p_partkey").agg(F.min("unit_price").alias("unit_price"))
     return (
@@ -3487,7 +3484,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     global scalar subquery.
 
     Scale posture: one lineitem shuffle on l_partkey; the global total
-    is a second aggregation over the SAME grouped frame (localCheckpoint
+    is a second aggregation over the SAME grouped frame (pinned
     so the shuffle isn't recomputed), attached as a broadcast single
     row — never a driver collect."""
     li = _t(spark, sf_dir, "lineitem")
@@ -3502,7 +3499,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(nat_sup), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(_dsum(F.col("l_extendedprice") * F.col("l_quantity"), "part_value"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     total = value.agg(
         F.sum(F.col("part_value").cast("decimal(38,6)")).cast("double").alias("__total__"),
@@ -3596,7 +3593,7 @@ def q_part_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(red), li.l_partkey == F.col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(38,6)")).cast("double").alias("qty"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     threshold = qty.agg(
         F.round(F.expr("percentile(qty, 0.5)"), 6).alias("__median__"),
@@ -4965,7 +4962,7 @@ def q_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         cooccurrence_pairs(j, "l_orderkey", "p_brand")
         .orderBy(F.desc("n_baskets"), "item_a", "item_b")
         .limit(40)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     return triangle_count(
         edges.select(F.col("item_a").alias("src"), F.col("item_b").alias("dst")),
@@ -6800,7 +6797,7 @@ def q_bpe_encode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # Dictionary computed ONCE and shared: train and encode otherwise
     # each re-run the corpus explode+aggregate (r12)
-    words = word_counts(docs, "text").localCheckpoint(eager=False)
+    words = word_counts(docs, "text").transform(pin)
     merges = bpe_train(docs, "text", num_merges=20, words=words)
     return bpe_encode_counts(
         docs, "text", "doc_id", merges, words=words,
@@ -6828,7 +6825,7 @@ def q_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     # shared pinned dictionary as in q_bpe_encode_counts (r12)
-    words = word_counts(docs, "text").localCheckpoint(eager=False)
+    words = word_counts(docs, "text").transform(pin)
     merges = bpe_train(docs, "text", num_merges=20, words=words)
     out = bpe_encode_ids(docs, "text", "doc_id", merges, words=words)
     return out.select(
@@ -6861,7 +6858,7 @@ def q_bpe_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared pinned dictionary: train, encode AND the vocab-id table
     # otherwise each re-run the corpus explode+aggregate (r12 profile:
     # 3 independent derivations in this one query)
-    words = word_counts(docs, "text").localCheckpoint(eager=False)
+    words = word_counts(docs, "text").transform(pin)
     merges = bpe_train(docs, "text", num_merges=12, words=words)
     ids = bpe_encode_ids(docs, "text", "doc_id", merges, words=words)
     vocab = bpe_vocab_ids(docs, "text", merges, words=words)
@@ -7097,7 +7094,7 @@ def q_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Pin: feeds the per-type mean AND the scored join — unpinned,
         # the raw events scan+aggregate replays per consumer. The pin
         # is |types| x |days| rows, calendar-bounded at any scale.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     means = daily.groupBy("event_type").agg(
         F.round(F.avg("daily_value"), 6).alias("target"),
@@ -7958,7 +7955,7 @@ def q_value_change_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Pin: feeds the per-type mean AND the CUSUM-walk join —
         # unpinned, the raw events scan+aggregate executed 4x in this
         # plan. |types| x |days| rows, calendar-bounded at any scale.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     means = daily.groupBy("event_type").agg(
         F.round(F.avg("daily_value"), 6).alias("target"),
@@ -8855,7 +8852,7 @@ def q_logreg_token_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.array_contains(_tok("text"), "spark").cast("int").alias("is_spark"),
         presence_buckets_expr("text", 256).alias("__fb"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     n_docs = docs.count()
     sc = spark.sparkContext
     parts = max(1, min(sc.defaultParallelism, n_docs // 1250 or 1))
@@ -9087,7 +9084,7 @@ def q_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_contains(
             F.transform(toks, lambda t: F.lower(t)), "spark",
         ).cast("double").alias("y"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cal = isotonic_calibrate(
         scored.select(F.col("s").alias("score"), "y"), "score", "y",
         score_round=2,
@@ -9829,7 +9826,7 @@ def q_ndcg_termscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Pinned: tf feeds BOTH the ranked runs and the qrels grades,
         # and its upstream (full-text replace-count per query term) is
         # the expensive part of the plan.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     w = Window.partitionBy("query_id").orderBy(F.col("tf").desc(), F.col("doc_id"))
     runs = tf.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 10)
@@ -10152,7 +10149,7 @@ def _termscan_runs_qrels(spark: SparkSession, sf_dir: str):
         .filter(F.col("tf") > 0)
         # Pinned: tf feeds both the ranked runs and the qrels side —
         # same double-use as q_ndcg_termscan above.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     w = Window.partitionBy("query_id").orderBy(F.col("tf").desc(), F.col("doc_id"))
     runs = tf.withColumn("rank", F.row_number().over(w))
@@ -10444,7 +10441,7 @@ def q_kmv_overlap_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in this plan. The sketch table's 2 references stay unpinned: its
     # own aggregation is cheap and a second pin conversion measured
     # more construct latency than the replay costs.
-    eu = ev.distinct().localCheckpoint(eager=False)
+    eu = ev.distinct().transform(pin)
     sizes = eu.groupBy("event_type").agg(F.count(F.lit(1)).alias("__n__"))
     inter = (
         eu.alias("x")

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rdsa_utils_spark.operators.text import tokens
+from rdsa_utils_spark.plans.tuning import pin
 
 
 def _round_half_up(x: float, digits: int) -> float:
@@ -104,7 +105,7 @@ def train_naive_bayes(
     # any scale.
     counts = tok.groupBy("label", "token").agg(
         F.count(F.lit(1)).alias("__c__"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     n_docs = df.count()
     doc_counts = df.groupBy(F.col(label_col).alias("label")).agg(
         F.count(F.lit(1)).alias("__d__"),
@@ -402,8 +403,8 @@ def train_logreg_hashed(
     model-sized gradient — with zero joins, zero broadcasts and no
     per-iteration lineage growth (the model never lives in a plan,
     so there is nothing to checkpoint between steps).
-    ``cache_features`` (default True) pins that frame with a
-    localCheckpoint so tokenize+hash runs ONCE, not once per
+    ``cache_features`` (default True) pins that frame so
+    tokenize+hash runs ONCE, not once per
     iteration — the right trade whenever the sparse feature frame
     fits cluster storage (it is ≤ tokens-per-doc × 16B rows, far
     smaller than the corpus text). Set it False at corpus scale when
@@ -498,7 +499,7 @@ def train_logreg_hashed(
             )
         )
     if cache_features:
-        train = train.localCheckpoint(eager=False)
+        train = train.transform(pin)
 
     spark = df.sparkSession
     stats = train.agg(
@@ -906,7 +907,7 @@ def platt_scale_train(
     over the (score, label) projection — two partial sums per map
     task; the only driver state is the two scalars themselves (the
     bounded-driver-state device used by IVF's k-row centroid collect).
-    The projection is pinned with a localCheckpoint so the input
+    The projection is pinned so the input
     lineage runs once, not once per iteration. Labels must be 0/1;
     NULL scores/labels are excluded.
     """
@@ -922,7 +923,7 @@ def platt_scale_train(
             F.col(label_col).cast("double").alias("__y"),
         )
         .filter(F.col("__s").isNotNull() & F.col("__y").isNotNull())
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     first = base.agg(
         F.count(F.lit(1)).alias("n"), F.sum("__y").alias("np"),
@@ -992,7 +993,7 @@ def woe_iv(
 
     100 TB posture: one map-side-combined groupBy over the corpus; the
     totals are a 1-row attach to the (small) category table, pinned
-    with a localCheckpoint so the corpus scan behind both consumers
+    so the corpus scan behind both consumers
     runs once.
     """
     if laplace < 0:
@@ -1009,7 +1010,7 @@ def woe_iv(
             F.sum(y).cast("long").alias("n_pos"),
             (F.count(F.lit(1)) - F.sum(y)).cast("long").alias("n_neg"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     totals = grouped.agg(
         F.sum("n_pos").alias("__tp"),
@@ -1090,7 +1091,7 @@ def isotonic_calibrate(
             F.count(F.lit(1)).alias("n"),
             F.sum("__y").cast("long").alias("n_pos"),
         )
-        .localCheckpoint(eager=False)  # bounded; consumed by 2 branches
+        .transform(pin)  # bounded; consumed by 2 branches
     )
     k = g.count()
     if k > max_knots:
@@ -1114,7 +1115,7 @@ def isotonic_calibrate(
         "n_pos",
         F.sum("n").over(w_pre).alias("__cn"),
         F.sum("n_pos").over(w_pre).alias("__cp"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     lhs = p.select(
         F.col("__s").alias("si"),
         (F.col("__cp") - F.col("n_pos")).alias("__cp_lt"),

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rdsa_utils_spark.operators.text import tokens
+from rdsa_utils_spark.plans.tuning import pin
 
 # Gumbel scoring uses the same 12-hex-digit md5 uniform as
 # sampling.hash_uniform; re-derived here against (id, seed) so the
@@ -409,7 +410,7 @@ def conformal_threshold(
 
         # counted (grp) AND ranked (picked): pin the projection so an
         # expensive upstream scorer runs once, same as the global path.
-        scores = scores.localCheckpoint(eager=False)
+        scores = scores.transform(pin)
         grp = scores.groupBy(*by).agg(F.count(F.lit(1)).alias("n_cal"))
         rank_k = F.ceil(
             (F.col("n_cal") + F.lit(1)) * F.lit(1.0 - alpha),
@@ -426,7 +427,7 @@ def conformal_threshold(
             .join(picked, list(by), "left")
             .orderBy(*by)
         )
-    scores = scores.localCheckpoint(eager=False)  # counted AND ranked
+    scores = scores.transform(pin)  # counted AND ranked
     n = scores.count()
     if n == 0:
         raise ValueError("conformal_threshold: no non-null scores")
@@ -494,7 +495,7 @@ def doremi_reweight(
     combined groupBy(domain); all ``steps`` iterations run on the
     domain-cardinality frame with a 1-row mixture-mean attach per step
     (broadcast, the adjudicated scalar-attach shape) and a
-    ``localCheckpoint`` lineage cut per step (the PageRank/BT device).
+    pin per step (the PageRank/BT device).
     NULL domains/losses are excluded.
     """
     if steps < 1:
@@ -517,7 +518,7 @@ def doremi_reweight(
             "n",
             F.round(F.col("__ml_raw"), loss_round).alias("mean_loss"),
         )
-        .localCheckpoint(eager=False)  # domain-cardinality; every step
+        .transform(pin)  # domain-cardinality; every step
     )
     k = base.count()
     if k == 0:
@@ -642,7 +643,7 @@ def doremi_reweight(
                 w_new.alias("__w"),
                 (F.col("__ws") + w_new).alias("__ws"),
             )
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     return (
         base.join(state, "domain")

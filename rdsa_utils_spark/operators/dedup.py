@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rdsa_utils_spark.operators.text import shingles, tokens, with_fingerprint
+from rdsa_utils_spark.plans.tuning import pin
 
 
 def exact_dedup(
@@ -60,21 +61,11 @@ def dedup_against_corpus(
     text_col: str,
     id_col: str,
     keep: str = "min",
-    pin: bool = True,
 ) -> DataFrame:
     """Incremental ingest dedup: drop rows of ``new_df`` whose exact
     fingerprint (md5 of normalized text — same digest as
     :func:`exact_dedup`) already exists in ``corpus_df``, then
     exact-dedup the survivors within the batch.
-
-    ``pin`` (default True) localCheckpoints the fingerprinted batch
-    INCLUDING its payload columns, duplicating one incremental batch
-    into executor storage (and truncating lineage: a lost block fails
-    the job instead of recomputing). That is the right trade for
-    routine batch sizes; for very large batches with wide document
-    bodies, pass ``pin=False`` to keep the lazy plan (the corpus
-    build side is then rebuilt under every union branch of
-    ``new_df`` — the cost the pin exists to remove).
 
     The standard shape for a training corpus that grows by batches:
     the historical side reduces to DISTINCT 32-char digests before the
@@ -93,9 +84,7 @@ def dedup_against_corpus(
     # runs once against one corpus build. The pin stores one
     # incremental batch, never the corpus (the bloom sibling makes
     # the same trade).
-    new_fp = with_fingerprint(new_df, text_col, "__fp__")
-    if pin:
-        new_fp = new_fp.localCheckpoint(eager=False)
+    new_fp = with_fingerprint(new_df, text_col, "__fp__").transform(pin)
     corpus_fp = (
         with_fingerprint(corpus_df, text_col, "__fp__")
         .select("__fp__")
@@ -251,7 +240,6 @@ def lsh_candidate_pairs(
     signature_col: str = "minhash",
     num_bands: int = 16,
     signature_length: Optional[int] = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding.
 
@@ -268,12 +256,8 @@ def lsh_candidate_pairs(
 
     Pass ``signature_length`` (you know it: it's ``num_perm``) to keep
     the plan fully lazy; otherwise one probe action reads it from the
-    first row. ``cache=True`` materializes the (small: id, band, hash)
-    banded frame via ``localCheckpoint`` so the self-join's two sides
-    don't recompute the signature pipeline; unlike ``persist()``, the
-    checkpoint blocks are reclaimed by Spark's ContextCleaner once the
-    frame is unreferenced, so repeated pipeline runs don't accumulate
-    executor storage (round-1 leak).
+    first row. The (small: id, band, hash) banded frame is pinned so
+    the self-join's two sides don't recompute the signature pipeline.
     """
     if signature_length is None:
         sig_len_row = df.select(F.size(signature_col).alias("n")).first()
@@ -297,9 +281,7 @@ def lsh_candidate_pairs(
 
     banded = band_hash_rows(
         df, id_col, signature_col, num_bands, rows_per_band,
-    )
-    if cache:
-        banded = banded.localCheckpoint(eager=False)
+    ).transform(pin)
 
     left = banded.alias("l")
     right = banded.alias("r")
@@ -531,7 +513,7 @@ def minhash_near_dedup(
         # stores only the ids of non-minimal exact-dup members: empty
         # when there are no exact dups, and exactly the rows the
         # collapse removes when there are — never corpus-sized.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rep_docs = eligible.join(exact_losers, id_col, "left_anti")
     with_sig = minhash_signatures(rep_docs, text_col, num_perm, shingle_n)
@@ -760,7 +742,7 @@ def dedup_clusters(
     the label frame on the source id plus one min-aggregation — both
     hash-partitioned on the same key, so AQE coalesces them into the
     same exchange layout — plus one label-frame self-join (O(nodes),
-    cheap next to the edge join). ``localCheckpoint`` after every
+    cheap next to the edge join). A pin after every
     round cuts the growing lineage (the driver loop is the legitimate
     iterative pattern; per-round driver traffic is one scalar).
     Pointer jumping makes rounds O(log diameter) instead of
@@ -781,7 +763,7 @@ def dedup_clusters(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     if max_driver_edges:
         # Driver fast path (round-12; the bpe/BT/doremi capped-collect
@@ -843,7 +825,7 @@ def dedup_clusters(
         edges.select(F.col("src").alias("id"))
         .dropDuplicates(["id"])
         .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     prev_sum = labels.agg(F.sum("label")).first()[0]
     for _ in range(max_iterations):
@@ -855,7 +837,7 @@ def dedup_clusters(
             .union(neighbour)
             .groupBy("id")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         # Pointer jumping: label(v) ← label(label(v)). Every label IS
         # a node id present in the frame (it is a min over member
@@ -870,7 +852,7 @@ def dedup_clusters(
                 "label",
             )
             .select("id", F.col("__jump__").alias("label"))
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         new_sum = labels.agg(F.sum("label")).first()[0]
         if new_sum == prev_sum:
@@ -891,7 +873,6 @@ def dedup_against_corpus_bloom(
     expected_items: int = 1_000_000,
     fpp: float = 0.01,
     max_bloom_bytes: int = 64 << 20,
-    pin: bool = True,
 ) -> DataFrame:
     """:func:`dedup_against_corpus` with a Bloom prefilter — identical
     results, different shuffle profile.
@@ -955,17 +936,13 @@ def dedup_against_corpus_bloom(
     # maybe-side anti-join, so an unpinned frame runs the whole
     # normalize+md5 fingerprint pass over the batch twice. The pin
     # stores one incremental batch INCLUDING payload columns (never
-    # the corpus) — cheaper than a second full fingerprint scan at
-    # routine batch sizes; ``pin=False`` opts out for very large
-    # batches with wide bodies (same trade as
-    # :func:`dedup_against_corpus`).
+    # the corpus) — cheaper than a second full fingerprint scan.
     flagged = (
         new_fp.join(F.broadcast(bitmap))
         .withColumn("__maybe__", maybe)
         .drop("__bloom__")
+        .transform(pin)
     )
-    if pin:
-        flagged = flagged.localCheckpoint(eager=False)
     definite_fresh = flagged.filter(~F.col("__maybe__")).drop("__maybe__")
     candidates = (
         flagged.filter(F.col("__maybe__"))
@@ -1041,7 +1018,7 @@ def jaccard_similarity_join(
         # Pin the tokenize+md5 projection ONCE: it feeds the member
         # map AND the representative groupBy — pinning each consumer
         # separately (pre-r12) materialized this scan twice.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     members = keyed.select("__k", "__id")
     # one representative (smallest id) per distinct token SET
@@ -1053,7 +1030,7 @@ def jaccard_similarity_join(
             F.col("__s.__tk").alias("__tk"),
             "__k",
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rep_map = base.select("__k", F.col("__id").alias("__rid"))
     # identical sets: every within-clique pair is Jaccard exactly 1.0
@@ -1090,7 +1067,7 @@ def jaccard_similarity_join(
         # explode AND both verify-join sides — without the checkpoint
         # Catalyst re-executes the whole pipeline three times (same
         # re-run hazard bm25_topk/tf_idf_top_terms checkpoint for).
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # Prefix length L = n - ceil(t·n) + 1; round before ceil so binary
     # float noise (0.9·10 = 9.000000000000002) can never SHORTEN the
@@ -1268,14 +1245,14 @@ def span_dedup(
     # kicking the whole tokenize+slice pipeline out of codegen (≈5×
     # slower than evaluating the projection once), and the two
     # consumers below (first-occurrence aggregate and the kept join
-    # probe) would each re-run it. The lazy localCheckpoint
+    # probe) would each re-run it. The lazy pin
     # materializes (id, blocks) exactly once — the same
     # pin-the-reduced-frame trade as train_logreg_hashed's
     # cache_features: the pinned frame is the tokenized corpus, the
     # same magnitude this operator shuffles anyway.
     pinned = with_toks.select(
         "__id", blocks.alias("__blocks"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     # posexplode of an empty array emits no rows, so no explicit
     # size(__blocks) > 0 filter is needed here.
     exploded = pinned.select(

@@ -17,6 +17,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 
 def funnel_counts(
     df: DataFrame,
@@ -62,7 +64,7 @@ def funnel_counts(
             # scans — 6 parquet scans for a 3-step funnel. The pin is
             # the per-user (user, min-ts) reduction: user-sized and
             # shrinking every step, never the raw event stream.
-            reached = reached.localCheckpoint(eager=False)
+            reached = reached.transform(pin)
         counts.append(
             reached.agg(
                 F.lit(i + 1).alias("step"),
@@ -891,7 +893,7 @@ def funnel_latency(
             # chain of event scans — 8 parquet scans for a 3-step
             # funnel. The pin is the per-user conditional-min frame:
             # user-sized, shrinking each step.
-            cur = cur.localCheckpoint(eager=False)
+            cur = cur.transform(pin)
         reached.append(cur)
         prev = cur
     out = None

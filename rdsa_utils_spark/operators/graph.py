@@ -28,10 +28,10 @@ Design (Spark-first, deterministic):
   ``groupBy(dst)`` reuses the existing hash partitioning, so an
   iteration shuffles O(nodes), not O(edges). Past
   ``max_broadcast_nodes`` the join falls back to a plain shuffle
-  hash-join (AQE handles celebrity-node skew). ``localCheckpoint``
-  after every iteration truncates the plan exactly like
-  ``dedup_clusters`` does, so the DAG never grows with the iteration
-  count.
+  hash-join (AQE handles celebrity-node skew). A pin
+  after every iteration materializes the ranks exactly like
+  ``dedup_clusters`` does, so the executed DAG never grows with the
+  iteration count.
 - Driver traffic: one ``count()`` for N. No other driver data path.
 """
 
@@ -41,6 +41,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from rdsa_utils_spark.plans.tuning import pin
 
 __all__ = ["pagerank", "cooccurrence_pairs", "triangle_count", "connected_components", "label_propagation"]
 
@@ -158,7 +160,7 @@ def pagerank(
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)  # count() below materializes it
+        .transform(pin)  # count() below materializes it
     )
     n = nodes.count()
     small = n <= max_broadcast_nodes
@@ -203,7 +205,7 @@ def pagerank(
                     + F.lit(damping) * F.coalesce(F.col("__m"), F.lit(0.0))
                 ).alias(rank_col),
             )
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     # One materializing action for the WHOLE iteration chain: the
     # nested broadcast builds compute rounds 1..k-1 (shares computes
@@ -243,7 +245,6 @@ def association_rules(
     item_col: str,
     min_count: int = 2,
     round_to: int = 6,
-    pin: bool = True,
 ) -> DataFrame:
     """Pairwise association rules from market baskets: for each
     DIRECTED pair (a → b), ``support`` = P(a,b), ``confidence`` =
@@ -257,27 +258,19 @@ def association_rules(
     (``antecedent``, ``consequent``, ``n_both``, ``n_antecedent``,
     ``support``, ``confidence``, ``lift``) for pairs with
     ``n_both >= min_count``, both rule directions.
-
-    ``pin`` (default True) localCheckpoints the deduped
-    (basket, item) stream. Unlike the vocabulary-/calendar-bounded
-    pins elsewhere in the package, this one is LINEAR IN THE INPUT:
-    it duplicates the distinct pair set into executor storage, and a
-    checkpoint truncates lineage — a lost executor block fails the
-    job instead of recomputing. At ingest scale, or on clusters where
-    that storage/fault-tolerance trade is wrong, pass ``pin=False``
-    to keep the lazy 5x-replayed plan instead.
     """
     # Pin the deduped basket-item stream: it feeds the item supports
     # (read on both the antecedent and consequent side), the
     # basket-count scalar and BOTH self-join sides — unpinned, the
     # source scan + distinct aggregate executed 5x in this plan. The
     # pin is the (basket, item) pair set the algorithm is defined on:
-    # linear in the input, no payload columns.
-    base = df.select(
-        F.col(basket_col).alias("__basket"), F.col(item_col).alias("__item"),
-    ).dropDuplicates(["__basket", "__item"])
-    if pin:
-        base = base.localCheckpoint(eager=False)
+    # linear in the input (unlike the vocabulary-/calendar-bounded
+    # pins elsewhere), no payload columns.
+    base = (
+        df.select(F.col(basket_col).alias("__basket"), F.col(item_col).alias("__item"))
+        .dropDuplicates(["__basket", "__item"])
+        .transform(pin)
+    )
     item_counts = base.groupBy(F.col("__item")).agg(
         F.count(F.lit(1)).alias("__n_item"),
     )
@@ -351,7 +344,7 @@ def label_propagation(
     broadcast per round while the graph fits
     ``max_broadcast_nodes``, so an iteration shuffles O(nodes) for
     the per-(node, label) counts, never the edges; per-round
-    ``localCheckpoint`` keeps the DAG depth constant.
+    pin keeps the DAG depth constant.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
@@ -362,7 +355,7 @@ def label_propagation(
         .repartition(F.col("__dst"))
         .persist()
     )
-    nodes = und.select(F.col("__dst").alias("node")).distinct().localCheckpoint(eager=False)
+    nodes = und.select(F.col("__dst").alias("node")).distinct().transform(pin)
     small = nodes.count() <= max_broadcast_nodes  # count() materializes
 
     def _bcast(df: DataFrame) -> DataFrame:
@@ -396,7 +389,7 @@ def label_propagation(
         labels = (
             labels.join(_bcast(best), "node", "left")
             .select("node", F.coalesce("__new", "community").alias("community"))
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     # Materialize the whole lazy chain (one action; ``und`` computes
     # once and is reused from cache) before releasing the cache.

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 IMAGE_META_SCHEMA = (
     "n_bytes long, format string, width int, height int, n_channels int"
 )
@@ -288,7 +290,7 @@ def payload_near_dups(
     # Both sides of the banded self-join derive from sigs — pin the
     # narrow (id, 64-bit sig) frame so the chunk-digest + SimHash
     # pipeline over the payload bytes runs ONCE, not once per side.
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = sigs.transform(pin)
 
     def _band_val(b: int) -> Column:
         if band_bits == 64:  # n_bands=1: the band IS the signature

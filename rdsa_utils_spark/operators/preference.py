@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 __all__ = ["bt_ratings", "win_rate_matrix"]
 
 
@@ -131,7 +133,7 @@ def win_rate_matrix(
         )
     )
     if m_tests is None:
-        pairs = pairs.localCheckpoint(eager=False)  # pair-cardinality
+        pairs = pairs.transform(pin)  # pair-cardinality
         m_tests = pairs.count()
         if m_tests == 0:
             m_tests = 1
@@ -196,8 +198,8 @@ def bt_ratings(
     game-count matrix in one map-side-combined aggregation; each
     iteration is two equi-joins of that matrix against the
     item-cardinality rating frame plus one groupBy — no driver state,
-    no parameter server; ratings are lineage-cut per round
-    (``localCheckpoint``, the PageRank device). Ties/self-pairs and
+    no parameter server; ratings are pinned per round
+    (the PageRank device). Ties/self-pairs and
     NULL items are excluded.
 
     ``max_driver_pairs``: when the already-aggregated game matrix has
@@ -221,7 +223,7 @@ def bt_ratings(
     outcomes = (
         df.select(w.alias("__w"), l.alias("__l"))
         .filter(w.isNotNull() & l.isNotNull() & (w != l))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     games = (
         outcomes.select(F.col("__w").alias("__i"), F.col("__l").alias("__j"))
@@ -232,7 +234,7 @@ def bt_ratings(
         )
         .groupBy("__i", "__j")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=False)  # reused every iteration
+        .transform(pin)  # reused every iteration
     )
     wins = outcomes.groupBy(F.col("__w").alias("__i")).agg(
         F.count(F.lit(1)).alias("wins"),
@@ -245,7 +247,7 @@ def bt_ratings(
             "games",
             F.coalesce("wins", F.lit(0)).alias("wins"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     n_items = items.count()
     # term_round <= 12 keeps the distributed path's decimal(38,12)
@@ -307,7 +309,7 @@ def bt_ratings(
                     rating_round,
                 ).alias("__r"),
             )
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
     return (
         items.join(ratings, "__i")

@@ -30,6 +30,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 __all__ = [
     "hash_uniform",
     "deterministic_split",
@@ -338,7 +340,7 @@ def mix_corpora(
     # the rate table); pin the |sources|-row frame so the corpus scan
     # behind it runs once and AQE cannot re-plan the shared subtree
     # differently per consumer.
-    counts = counts.localCheckpoint(eager=False)
+    counts = counts.transform(pin)
     c = counts.agg(
         F.min(F.col("__n").cast("double") / F.col("__p")).alias("__C"),
     )
@@ -477,7 +479,7 @@ def negative_sample(
     slots = add_row_index(
         corpus.select(F.col(corpus_id).alias("__neg_id__")), ["__neg_id__"],
         index_col="__slot__",
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     n = slots.count()
     if n == 0:
         raise ValueError("negative_sample: corpus is empty")
@@ -667,7 +669,7 @@ def temporal_split(
         .withColumn("__pid__", F.spark_partition_id())
         # pin the sampled range boundaries so the counts pass and the
         # boundary pass see the same partition assignment.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     counts = {
         r["__pid__"]: r["cnt"]
@@ -986,7 +988,7 @@ def neyman_sample(
                 n,
             ).alias("n_alloc"),
         )
-        .localCheckpoint(eager=False)  # consumed by caller AND the draw
+        .transform(pin)  # consumed by caller AND the draw
     )
     u = hash_uniform(id_col, seed)
     w = Window.partitionBy(F.col(strata_col)).orderBy(

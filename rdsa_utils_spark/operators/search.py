@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rdsa_utils_spark.operators.text import tokens
+from rdsa_utils_spark.plans.tuning import pin
 
 
 def _doc_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -67,18 +68,17 @@ def bm25_topk(
     terms = [t.lower() for t in query_terms]
 
     matches = _doc_terms(df, id_col, text_col).filter(F.col("__term__").isin(terms))
-    # localCheckpoint: the document-frequency aggregate below derives
+    # Pinned: the document-frequency aggregate below derives
     # from tf — without materialization Catalyst re-runs the whole
     # explode+aggregate subtree (a second full corpus scan). The
-    # checkpointed frame is small (matching docs × query terms) and
-    # its blocks are auto-reclaimed by the ContextCleaner.
+    # pinned frame is small (matching docs × query terms).
     tf = (
         matches.groupBy(id_col, "__term__")
         .agg(
             F.count("*").alias("__tf__"),
             F.first("__dl__").alias("__dl__"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # Corpus scalars as a broadcast single row; term document
     # frequencies bounded by |query_terms| -> broadcast join.
@@ -131,7 +131,7 @@ def tf_idf_top_terms(
     tf = (
         terms.groupBy(id_col, "__term__")
         .agg(F.count("*").alias("__tf__"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     dfreq = tf.groupBy("__term__").agg(F.count("*").alias("__df__"))
     n_docs = df.select(F.count("*").alias("__n_docs__"))

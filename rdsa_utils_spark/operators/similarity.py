@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 
 #: Default cap on the bytes a rescoring path may gather to the driver
 #: and broadcast (the float64 id→vector matrix). 512 MiB ≈ 87k rows at
@@ -587,7 +589,7 @@ def cosine_near_dup_pairs(
         .withColumn(
             "__rep__", F.min("__mid__").over(Window.partitionBy("__mvec__")),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rep_rows = memb.filter(F.col("__mid__") == F.col("__rep__")).select(
         F.col("__mid__").alias(id_col), F.col("__mvec__").alias(vec_col),
@@ -595,15 +597,12 @@ def cosine_near_dup_pairs(
     # Bucket-join and dedup on BARE ids — (table, bucket, id) is three
     # longs per row, so the candidate-pair explosion and the
     # dropDuplicates shuffle stay narrow. Vector payloads are attached
-    # only to the surviving distinct pairs. localCheckpoint: the
-    # self-join would otherwise run the bucketize UDF once per side,
-    # and (unlike persist) its blocks are auto-reclaimed by the
-    # ContextCleaner when the frame goes out of scope — no storage
-    # leak across repeated pipeline runs.
+    # only to the surviving distinct pairs. Pinned: the self-join
+    # would otherwise run the bucketize UDF once per side.
     b = _with_buckets(
         rep_rows, id_col, vec_col, "nid", dim, bits, num_tables, seed,
         keep_vec=False, plane_method=plane_method,
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cand = (
         b.select("table", "bucket", F.col("nid").alias("id_a"))
         .join(b.select("table", "bucket", F.col("nid").alias("id_b")), ["table", "bucket"])
@@ -1412,7 +1411,7 @@ def semantic_dedup(
         scored = cosine_near_dup_pairs(
             df, dim, id_col=id_col, vec_col=vec_col, threshold=threshold,
             expand="representatives", **pair_kwargs,
-        ).localCheckpoint(eager=False)
+        ).transform(pin)
         memb = (
             df.select(
                 F.col(id_col).alias("__mid__"),
@@ -1423,7 +1422,7 @@ def semantic_dedup(
                 F.min("__mid__").over(Window.partitionBy("__mvec__")),
             )
             .select("__mid__", "__rep__")
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         self_ok = scored.filter(F.col("id_a") == F.col("id_b")).select(
             F.col("id_a").alias("__rep__"),
@@ -1957,7 +1956,7 @@ def embedding_drift(
     # executed twice over (4 parquet scans in the drift plan). The
     # pin is groups x 2 rows of dim-length centroid arrays, never the
     # vector corpus.
-    sides = scalars.join(coords, [*by, "__s__"]).localCheckpoint(eager=False)
+    sides = scalars.join(coords, [*by, "__s__"]).transform(pin)
     a = sides.filter(F.col("__s__")).select(
         *by,
         F.col("__n__").alias("n_a"),

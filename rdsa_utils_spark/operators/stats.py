@@ -32,6 +32,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 __all__ = [
     "grouped_linear_fit",
     "correlation_matrix",
@@ -552,7 +554,7 @@ def grouped_bootstrap_ci(
         *keys,
         F.col(value_col).alias("__v"),
         rid.cast("string").alias("__rid"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     exploded = src.select(
         *keys, "__v", "__rid",
         F.explode(F.sequence(F.lit(0), F.lit(n_resamples - 1))).alias("__b"),
@@ -842,7 +844,7 @@ def price_index(
     # corpus-sized join+agg upstream executes once per consumer
     # (r12 plan audit: 2 parquet scans of the fact table). The pinned
     # frame is (n_items × n_periods) rows — dimension-table sized.
-    per = per.localCheckpoint(eager=False)
+    per = per.transform(pin)
     base = per.filter(F.col("period") == base_period).select(
         "__item",
         F.col("__p").alias("__p0"),
@@ -1049,7 +1051,7 @@ def chained_index(
     # Pin as in price_index: per feeds the period table, the current
     # side AND the previous side of every link join — 3 full upstream
     # replays without the pin (r12).
-    per = per.localCheckpoint(eager=False)
+    per = per.transform(pin)
     periods = per.select("period").distinct()
     # period-table-sized frame: constant non-foldable partition key
     # silences the WindowExec global-window warning without changing
@@ -1478,13 +1480,13 @@ def tornqvist_index(
     # join; matched additionally feeds the expenditure rollup AND the
     # term frame — without both pins the corpus-sized upstream
     # executes 4+ times (the r12 before-plan shows 4 fact scans).
-    per = per.localCheckpoint(eager=False)
+    per = per.transform(pin)
     base = per.filter(F.col("period") == base_period).select(
         "__item",
         F.col("__p").alias("__p0"),
         F.col("__q").alias("__q0"),
     )
-    matched = per.join(base, "__item").localCheckpoint(eager=False)
+    matched = per.join(base, "__item").transform(pin)
     d = lambda c: c.cast("decimal(38,6)")  # noqa: E731
     exp_tot = matched.groupBy("period").agg(
         F.sum(d(F.col("__p") * F.col("__q"))).alias("__et"),

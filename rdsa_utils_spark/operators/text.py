@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 # Tiny built-in stopword lists for the language heuristic. Deliberately
 # short — this is a deterministic, dependency-free heuristic, not a
 # model; swap in fasttext/cld3 via mapInPandas where available.
@@ -154,7 +156,7 @@ def unigram_lm_score(
     # is vocabulary-sized, the bigram-LM (bigram_lm_score) precedent.
     counts = stream.groupBy("__tok").agg(
         F.count(F.lit(1)).alias("__c"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     totals = counts.agg(
         F.sum("__c").alias("__n"), F.count(F.lit(1)).alias("__v"),
     )
@@ -661,20 +663,20 @@ def collocation_pmi(
         .select(F.col("bg.0").alias("w1"), F.col("bg.1").alias("w2"))
     )
     # Both count frames are vocabulary-sized (≪ corpus) and each is
-    # consumed by 2-3 downstream branches; localCheckpoint pins them so
+    # consumed by 2-3 downstream branches; pinning them means
     # the corpus explode+aggregate runs ONCE per frame (not once per
     # branch) and AQE sees exact sizes (auto-broadcasting the vocab
     # side of the joins when it fits).
     pair_counts = (
         pair_stream.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     uni_counts = (
         with_toks.select(F.explode(tk).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     totals = pair_counts.agg(F.sum("n_pair").alias("n_bigrams"))
     n_tokens = uni_counts.agg(F.sum("n_w").alias("n_tokens"))
@@ -758,7 +760,7 @@ def bigram_lm_score(
     # the avoided replays are corpus-sized.
     pair_counts = doc_pairs.groupBy("__w1", "__w2").agg(
         F.sum("__dc").alias("__c12"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     left_counts = pair_counts.groupBy("__w1").agg(F.sum("__c12").alias("__c1"))
     # V = the bigram model's vocabulary: distinct tokens participating
     # in any bigram — derived from the (vocab²-bounded) pair-count
@@ -832,7 +834,7 @@ def term_log_odds(
     )
     counts = stream.groupBy("__g", "term").agg(
         F.count(F.lit(1)).alias("__c"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     ca = counts.filter(F.col("__g") == group_a).select(
         "term", F.col("__c").alias("count_a"),
     )

@@ -13,8 +13,8 @@ learning (Sennrich et al. 2016) re-expressed for Spark:
   the argmax pair + ONE JVM fold (`F.aggregate`) rewriting symbol
   arrays — greedy left-to-right non-overlapping merge, the classic
   semantics. No Python in the data path.
-- Lineage is cut with `localCheckpoint` every few rounds so the plan
-  doesn't deepen linearly with merge count.
+- The vocabulary is pinned every few rounds so each round reads it
+  instead of re-deriving the merge chain.
 
 Tie-breaks are total (count desc, left asc, right asc), so training
 is deterministic across runs, partitionings, and cluster sizes.
@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from rdsa_utils_spark.operators.text import tokens
 from rdsa_utils_spark.operators.windows import constant_partition_key
+from rdsa_utils_spark.plans.tuning import pin
 
 #: End-of-word marker appended to every word's symbol sequence
 #: (Sennrich-style): merges learned at word ends don't leak into
@@ -47,7 +48,7 @@ def word_counts(df: DataFrame, text_col: str) -> DataFrame:
     :func:`bpe_encode_ids` and :func:`bpe_vocab_ids`: each derives this
     frame from the corpus when called alone. A pipeline that chains
     several of them should compute it ONCE, pin it
-    (``localCheckpoint(eager=False)``) and pass it via their ``words=``
+    (``df.transform(pin)``) and pass it via their ``words=``
     parameter — r12 measured the train+encode+vocab chain re-running
     the corpus explode+aggregate 3× without it."""
     return (
@@ -150,7 +151,7 @@ def bpe_train(
         )
     if num_merges < 1:
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
-    vocab = _word_vocab(df, text_col, words).localCheckpoint(eager=False)
+    vocab = _word_vocab(df, text_col, words).transform(pin)
     if max_driver_vocab:
         # cheap: vocab is the post-aggregation dictionary frame
         if vocab.limit(max_driver_vocab + 1).count() <= max_driver_vocab:
@@ -172,7 +173,7 @@ def bpe_train(
         merges.append((left, right, int(cnt)))
         vocab = vocab.withColumn("syms", _merge_fold(left, right))
         if (r + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=False)
+            vocab = vocab.transform(pin)
     return merges
 
 

@@ -24,6 +24,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 _Cols = Union[str, Column, Sequence[Union[str, Column]]]
 
 
@@ -211,10 +213,10 @@ def add_row_index(
         .sortWithinPartitions(*orders)
         .withColumn("__pid__", F.spark_partition_id())
     )
-    # localCheckpoint pins the sampled range boundaries so the counts
+    # The pin keeps the sampled range boundaries so the counts
     # pass and the output pass see the SAME partition assignment (a
     # recompute could re-sample boundaries and skew the offsets).
-    laid_out = laid_out.localCheckpoint(eager=False)
+    laid_out = laid_out.transform(pin)
     counts = {r["__pid__"]: r["cnt"] for r in
               laid_out.groupBy("__pid__").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     offsets, acc = {}, 0

@@ -6,6 +6,8 @@ Capability parity (public-API re-design):
 - ``cut_lineage`` — reference ``helpers/pyspark.py:540-592`` did a JVM
   RDD round-trip; ``localCheckpoint`` is the sanctioned equivalent
   (truncates the logical plan, keeps data on executors).
+- ``pin`` — the engine's one way to materialize a subtree that several
+  consumers share; the device is chosen from the session's master.
 - ``cache_time_df`` — reference ``helpers/pyspark.py:1031-1051``.
 - ``set_df_columns_nullable`` — reference ``helpers/pyspark.py:40-77``.
   The RDD rebuild is kept behind an explicit opt-in; the default is a
@@ -16,9 +18,11 @@ Capability parity (public-API re-design):
 from __future__ import annotations
 
 import os
+import re
 import time
 from typing import Optional, Sequence, Tuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,6 +54,46 @@ def smart_coalesce(
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate the logical plan (OOM / planner-blowup escape hatch)."""
     return df.localCheckpoint(eager=eager)
+
+
+#: Masters whose executors live in the driver's JVM: ``local``,
+#: ``local[N]``, ``local[*]`` and the retrying ``local[N,F]`` forms.
+#: ``local-cluster[...]`` starts separate executor JVMs, so it is a
+#: cluster here.
+_SINGLE_JVM_MASTER = re.compile(r"local(\[(\d+|\*)(,\d+)?\])?")
+
+
+def _single_jvm(master: str) -> bool:
+    return _SINGLE_JVM_MASTER.fullmatch(master) is not None
+
+
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once for the several consumers that share it.
+
+    The only place the engine picks a materialization device; operators
+    call it as ``df.transform(pin)``. The device follows the session's
+    master (a Python attribute, read without a JVM call):
+
+    - single JVM (``local[...]``): ``localCheckpoint`` — truncates the
+      plan and keeps the blocks in the one process, where an executor
+      cannot be lost apart from the driver;
+    - any other master: ``persist(MEMORY_AND_DISK)`` — lineage is kept,
+      so a block lost with its executor is recomputed instead of
+      failing the query (a ``localCheckpoint`` block cannot be). The
+      frame stays in the session's cache until it is unpersisted or
+      the cache is cleared.
+
+    ``eager=True`` materializes now (one job) instead of at the first
+    action. ``localCheckpoint`` is looked up on the instance at call
+    time, so class-level patches (``plans.audit.capture_lineage_cuts``)
+    see every pin.
+    """
+    if _single_jvm(df.sparkSession.sparkContext.master):
+        return df.localCheckpoint(eager=eager)
+    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if eager:
+        pinned.count()
+    return pinned
 
 
 def cache_time_df(df: DataFrame) -> Tuple[DataFrame, float, int]:

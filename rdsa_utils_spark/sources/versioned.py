@@ -39,6 +39,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rdsa_utils_spark.plans.tuning import pin
 from rdsa_utils_spark.sources.readers import read_parquet
 
 _MANIFEST = "_manifest.json"
@@ -358,7 +359,7 @@ def compact_snapshot(
         counts = (
             df.groupBy(*pcols)
             .agg(F.count(F.lit(1)).alias("__n__"))
-            .localCheckpoint(eager=True)
+            .transform(pin, eager=True)
         )
         total_rows = counts.agg(F.sum("__n__")).collect()[0][0] or 1
         rows_per_file = max(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rdsa_utils_spark.operators.text import with_fingerprint
+from rdsa_utils_spark.plans.tuning import pin
 
 _LOG = logging.getLogger(__name__)
 
@@ -686,7 +687,7 @@ def write_stream_near_dedup(
 
         sig = minhash_signatures(
             rep_docs, text_col, num_perm, shingle_n,
-        ).localCheckpoint(eager=True)  # batch-sized; consumed 4×
+        ).transform(pin, eager=True)  # batch-sized; consumed 4×
 
         # (1) within-batch: LSH candidates + exact-Jaccard verify,
         # greater id of each confirmed pair drops (batch semantics).
@@ -709,7 +710,7 @@ def write_stream_near_dedup(
         bands = band_hash_rows(
             survivors, id_col, "minhash",
             num_bands, num_perm // num_bands, out_id=id_col,
-        ).localCheckpoint(eager=True)
+        ).transform(pin, eager=True)
 
         # (2) cross-batch: probe the admitted-corpus band store. Both
         # state halves must exist — a crash between the bands and sigs
@@ -760,7 +761,7 @@ def write_stream_near_dedup(
         kept = survivors if dup_ids is None else survivors.join(
             dup_ids, id_col, "left_anti",
         )
-        kept = kept.localCheckpoint(eager=True)  # consumed 3×
+        kept = kept.transform(pin, eager=True)  # consumed 3×
 
         # Idempotent per-batch partition writes (replay overwrites).
         kept.drop("minhash").unionByName(blanks).write.mode(
@@ -1340,7 +1341,7 @@ def write_stream_exact_dedup(
             fp.withColumn("__rn__", F.row_number().over(w))
             .filter(F.col("__rn__") == 1)
             .drop("__rn__")
-            .localCheckpoint(eager=True)  # consumed by probe + 2 writes
+            .transform(pin, eager=True)  # consumed by probe + 2 writes
         )
         parts = _read_state_parts(spark, state_path, "fps", batch_id)
         kept = within
@@ -1366,7 +1367,7 @@ def write_stream_exact_dedup(
             seen = reduce(DataFrame.unionByName, seen_parts)
             kept = within.join(
                 F.broadcast(seen), fingerprint_col, "left_anti",
-            ).localCheckpoint(eager=True)
+            ).transform(pin, eager=True)
         kept.write.mode("overwrite").parquet(f"{path}/__batch__={batch_id}")
         kept.select(fingerprint_col).write.mode("overwrite").parquet(
             f"{state_path}/fps/__batch__={batch_id}",

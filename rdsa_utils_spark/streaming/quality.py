@@ -21,6 +21,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdsa_utils_spark.plans.tuning import pin
+
 __all__ = ["write_stream_contamination_gate", "write_stream_quality_gate"]
 
 
@@ -110,7 +112,7 @@ def write_stream_quality_gate(
             guard_done["v"] = True
         flagged = batch_df.withColumn(p_col, p_expr).withColumn(
             _FLAG, flag_expr,
-        ).localCheckpoint(eager=True)  # consumed by both sinks
+        ).transform(pin, eager=True)  # consumed by both sinks
         flagged.filter(F.col(_FLAG)).drop(_FLAG).write.mode(
             "overwrite",
         ).parquet(f"{path}/__batch__={batch_id}")
@@ -161,7 +163,7 @@ def write_stream_contamination_gate(
     The reference is reduced ONCE at gate construction to its
     distinct 60-bit shingle hashes
     (:func:`~rdsa_utils_spark.operators.dedup.reference_shingle_hashes`)
-    and pinned with a localCheckpoint — eval suites are small next to
+    and pinned — eval suites are small next to
     the stream, so AQE broadcasts the probe join every batch and the
     BATCH never shuffles (batch-keyed window + one broadcast join +
     one batch-keyed aggregate). Like the calibration gate, a live gate
@@ -213,7 +215,7 @@ def write_stream_contamination_gate(
         n=n,
         id_col=ref_id_col if ref_id_col is not None else id_col,
         text_col=ref_text_col if ref_text_col is not None else text_col,
-    ).localCheckpoint(eager=True)
+    ).transform(pin, eager=True)
     if ref_hashes.isEmpty():
         raise ValueError(
             "empty reference: the benchmark corpus produced no shingles",
@@ -245,7 +247,7 @@ def write_stream_contamination_gate(
                 F.col("contamination").isNull()
                 | (F.col("contamination") <= F.lit(max_contamination)),
             )
-            .localCheckpoint(eager=True)  # consumed by both sinks
+            .transform(pin, eager=True)  # consumed by both sinks
         )
         flagged.filter(F.col("__admit__")).drop("__admit__").write.mode(
             "overwrite",

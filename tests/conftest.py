@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -63,6 +64,20 @@ def assert_matches_oracle(sdf, duck, sql):
     assert sorted(spark_cols) == sorted(duck_cols)
     assert len(spark_rows) == len(duck_rows)
     assert _rows_key(spark_rows, spark_cols) == _rows_key(duck_rows, duck_cols)
+
+
+def jobs_in(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def assert_df_equal(actual, expected, sort_cols=None, approx=None):

@@ -38,6 +38,7 @@ from rdsa_utils_spark.sources.writers import (
     write_and_read_table,
     write_table,
 )
+from tests.conftest import jobs_in
 
 
 def test_session_presets_shape():
@@ -274,22 +275,6 @@ def test_read_parquet_handles_int96_timestamps(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
-def _jobs_in(spark, fn):
-    """Run ``fn`` under a fresh job group; return its result and the
-    number of Spark jobs it launched."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"schema-catalog-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_read_parquet_int64_nanos_miss_then_hit(spark, tmp_path):
     """A real INT64 TIMESTAMP(NANOS) file takes the nanosAsLong detour
     on the inferring read and on the cached one alike."""
@@ -307,7 +292,7 @@ def test_read_parquet_int64_nanos_miss_then_hit(spark, tmp_path):
     assert col.physical_type == "INT64" and "timeUnit=nanoseconds" in str(col.logical_type)
     before = spark.conf.get(key, "false")
     for expected_jobs in (None, 0):  # miss, then hit
-        df, jobs = _jobs_in(spark, lambda: read_parquet(spark, path))
+        df, jobs = jobs_in(spark, lambda: read_parquet(spark, path))
         if expected_jobs is not None:
             assert jobs == expected_jobs
         assert spark.conf.get(key, "false") == before
@@ -321,8 +306,8 @@ def test_read_parquet_int64_nanos_miss_then_hit(spark, tmp_path):
 def test_read_parquet_second_read_launches_no_job(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string").write.parquet(path)
-    first, jobs1 = _jobs_in(spark, lambda: read_parquet(spark, path))
-    second, jobs2 = _jobs_in(spark, lambda: read_parquet(spark, path))
+    first, jobs1 = jobs_in(spark, lambda: read_parquet(spark, path))
+    second, jobs2 = jobs_in(spark, lambda: read_parquet(spark, path))
     assert jobs1 >= 1  # schema inference
     assert jobs2 == 0
     assert second.schema == first.schema
@@ -445,7 +430,7 @@ def test_snapshot_reads_after_write_are_catalog_hits(spark, tmp_path):
 
     root = str(tmp_path / "snap")
     write_snapshot(spark.createDataFrame([(1, "a")], ["id", "v"]), root)
-    df, jobs = _jobs_in(spark, lambda: read_snapshot(spark, root))
+    df, jobs = jobs_in(spark, lambda: read_snapshot(spark, root))
     assert jobs == 0
     assert [tuple(r) for r in df.collect()] == [(1, "a")]
 
