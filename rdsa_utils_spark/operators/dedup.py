@@ -508,7 +508,7 @@ def minhash_near_dedup(
         .select(id_col)
         # Pinned: this loser-id frame feeds BOTH the representative
         # anti-join (executed while materializing the banded-signature
-        # checkpoint) and the final loser union — without the pin the
+        # pin) and the final loser union — without the pin the
         # scan+md5+window subtree executes once per consumer. The frame
         # stores only the ids of non-minimal exact-dup members: empty
         # when there are no exact dups, and exactly the rows the
@@ -743,22 +743,23 @@ def dedup_clusters(
     hash-partitioned on the same key, so AQE coalesces them into the
     same exchange layout — plus one label-frame self-join (O(nodes),
     cheap next to the edge join). A pin after every
-    round cuts the growing lineage (the driver loop is the legitimate
-    iterative pattern; per-round driver traffic is one scalar).
+    round keeps the plan one scan deep (the driver loop is the
+    legitimate iterative pattern; per-round driver traffic is one
+    scalar).
     Pointer jumping makes rounds O(log diameter) instead of
     O(diameter): percolated graphs (random-geometric near-dup edges,
     long template chains) converge in ~8 rounds where pure
     propagation needed hundreds.
     """
-    # Lazy checkpoints throughout (round-12 optimization): the
-    # per-round convergence sum is the ONLY action, and it
-    # materializes the whole round's chain — edge join, min-agg,
-    # pointer jump — as ONE Spark job. The former eager=True pattern
-    # paid two jobs per round (checkpoint + sum) and, because the
-    # pointer-jump self-join references ``propagated`` twice without a
-    # cut, executed the edge join + aggregation TWICE per round.
-    # Checkpointing ``propagated`` lazily makes it a single shared RDD
-    # node in the round's DAG: computed once, read by both join sides.
+    # Lazy pins throughout (round-12 optimization): the per-round
+    # convergence sum is the ONLY action, and it materializes the
+    # whole round's chain — edge join, min-agg, pointer jump — as ONE
+    # Spark job. The former eager=True pattern paid two jobs per round
+    # (pin + sum) and, because the pointer-jump self-join references
+    # ``propagated`` twice without a pin, executed the edge join +
+    # aggregation TWICE per round. Pinning ``propagated`` lazily makes
+    # it a single shared RDD node in the round's DAG: computed once,
+    # read by both join sides.
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -782,7 +783,7 @@ def dedup_clusters(
         # fixpoint alone defines — such inputs, and anything over the
         # cap, take the distributed rounds unchanged. The single agg
         # below both sizes/screens the edge list and materializes the
-        # lazy checkpoint. Pass 0 to force the distributed rounds.
+        # lazy pin. Pass 0 to force the distributed rounds.
         st = edges.agg(
             F.count(F.lit(1)).alias("n"),
             F.count("src").alias("ns"),
@@ -1064,9 +1065,9 @@ def jaccard_similarity_join(
         .withColumn("__n", F.size("__tk"))
         # Pin the frequency-sorted token arrays: this subtree (full
         # explode → freq join → collect_list shuffle) feeds the prefix
-        # explode AND both verify-join sides — without the checkpoint
+        # explode AND both verify-join sides — without the pin
         # Catalyst re-executes the whole pipeline three times (same
-        # re-run hazard bm25_topk/tf_idf_top_terms checkpoint for).
+        # re-run hazard bm25_topk/tf_idf_top_terms pin for).
         .transform(pin)
     )
     # Prefix length L = n - ceil(t·n) + 1; round before ceil so binary

@@ -23,7 +23,7 @@ Design (Spark-first, deterministic):
   extra all-reduce each round) for a normalization most rankings
   never read.
 - Per iteration the EDGE table never moves: shares are partitioned by
-  ``dst`` once (loop-invariant, lineage-cut), the rank vector — tiny
+  ``dst`` once (loop-invariant, persisted), the rank vector — tiny
   relative to edges — is broadcast into the join, and the
   ``groupBy(dst)`` reuses the existing hash partitioning, so an
   iteration shuffles O(nodes), not O(edges). Past
@@ -171,11 +171,13 @@ def pagerank(
     outw = e.groupBy("__src").agg(F.sum("__w").alias("__wout"))
     # Loop invariant, computed once: per-edge share, pre-partitioned on
     # the destination so every iteration's groupBy(dst) fully collapses
-    # in place — persist (not localCheckpoint) because a checkpoint
-    # scan forgets its outputPartitioning and would re-shuffle the
-    # partial aggregates every round; the cache is released before
-    # returning (the eager per-iteration rank checkpoints make the
-    # result independent of it).
+    # in place — persist (not pin) because a pin's scan forgets its
+    # outputPartitioning and would re-shuffle the partial aggregates
+    # every round; the cache is released before returning. The
+    # materialized per-iteration rank pins answer without it; on a
+    # cluster master a rank block lost with its executor is
+    # recomputed through ``shares``' lineage (local masters truncate
+    # the lineage, so there the result is independent of it).
     shares = (
         e.join(outw, "__src")
         .select(
@@ -192,7 +194,7 @@ def pagerank(
             .groupBy("__dst")
             .agg(F.sum(F.col("__share") * F.col(rank_col)).alias("__m"))
         )
-        # Lazy checkpoint: still cuts the lineage, but materialization
+        # Lazy pin: the plan stays one scan deep, but materialization
         # rides the NEXT round's broadcast build (or the caller's
         # action for the last round) instead of paying a dedicated
         # job per iteration (round-12: 5 fewer jobs per call here).
@@ -228,7 +230,7 @@ def connected_components(
 
     Thin graph-vocabulary alias over
     ``operators/dedup.dedup_clusters`` (iterative min-label
-    propagation with per-round lineage cuts and an exact convergence
+    propagation with per-round pins and an exact convergence
     check — see that operator for the scale design and the
     union-find property test); exposed here so graph workloads find
     it next to pagerank/triangles without knowing the dedup module.
@@ -385,7 +387,8 @@ def label_propagation(
             .select("node", F.col("__s.community").alias("__new"))
         )
         # Lazy: materialized by the next round's broadcast build / the
-        # caller's action — cuts lineage without a per-round job.
+        # caller's action — keeps the plan one scan deep without a
+        # per-round job.
         labels = (
             labels.join(_bcast(best), "node", "left")
             .select("node", F.coalesce("__new", "community").alias("community"))

@@ -126,7 +126,7 @@ def tf_idf_top_terms(
     """
     terms = _doc_terms(df, id_col, text_col)
     # Materialized for the same reason as in bm25_topk: dfreq reuses
-    # tf, and without a checkpoint the tokenize-explode-aggregate
+    # tf, and without a pin the tokenize-explode-aggregate
     # subtree (a full corpus scan) runs twice.
     tf = (
         terms.groupBy(id_col, "__term__")

@@ -129,9 +129,11 @@ def bpe_train(
     Driver traffic per round is ONE row; executor work per round is
     one vocab-frame aggregation + one fold. See module docstring for
     the 100 TB posture. ``checkpoint_every=2`` was measured fastest at
-    sf0.1 (every round re-derives the un-checkpointed fold chain from
-    the last cut, so wide gaps trade one cheap vocab materialization
-    for quadratically growing fold recompute; 8→2 cut bpe_merges 20%).
+    sf0.1 on a local master (every round re-derives the unpinned fold
+    chain from the last pin, so wide gaps trade one cheap vocab
+    materialization for quadratically growing fold recompute; 8→2 cut
+    bpe_merges 20%). On a cluster master each pin also keeps one
+    more level of lineage, up to the bound at which ``pin`` cuts it.
 
     ``max_driver_vocab``: when the DISTINCT-WORD vocabulary (already
     reduced by the first aggregation — the dictionary, never the

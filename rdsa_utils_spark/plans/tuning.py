@@ -74,26 +74,81 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     call it as ``df.transform(pin)``. The device follows the session's
     master (a Python attribute, read without a JVM call):
 
-    - single JVM (``local[...]``): ``localCheckpoint`` — truncates the
-      plan and keeps the blocks in the one process, where an executor
-      cannot be lost apart from the driver;
-    - any other master: ``persist(MEMORY_AND_DISK)`` — lineage is kept,
-      so a block lost with its executor is recomputed instead of
-      failing the query (a ``localCheckpoint`` block cannot be). The
-      frame stays in the session's cache until it is unpersisted or
-      the cache is cleared.
+    - single JVM (``local[...]``): ``localCheckpoint``, where an
+      executor cannot be lost apart from the driver;
+    - any other master: :func:`_pin_with_lineage`, whose blocks are
+      recomputed from lineage when lost with their executor (a
+      ``localCheckpoint`` block cannot be, and the query fails).
+
+    Either way the pinned frame's plan is one scan over the pinned RDD,
+    so a loop that pins every round keeps a plan of constant depth,
+    nothing enters the session's cache, and the blocks are released by
+    the ContextCleaner once no plan references the RDD.
 
     ``eager=True`` materializes now (one job) instead of at the first
     action. ``localCheckpoint`` is looked up on the instance at call
     time, so class-level patches (``plans.audit.capture_lineage_cuts``)
-    see every pin.
+    see every local pin.
     """
     if _single_jvm(df.sparkSession.sparkContext.master):
         return df.localCheckpoint(eager=eager)
-    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    return _pin_with_lineage(df, eager)
+
+
+#: Lineage pins one chain may stack before the next pin truncates it.
+#: Each chained pin lengthens the RDD lineage that every task ships: a
+#: loop pinning every second round overflowed the executors' stack at
+#: round 204 (~100 chained pins) on ``local-cluster[2,1,1024]``.
+_MAX_CHAINED_PINS = 32
+
+#: RDD name that carries a lineage pin's chain depth, e.g. ``pin 3``.
+_PIN_NAME = "pin "
+
+
+def _pin_with_lineage(df: DataFrame, eager: bool) -> DataFrame:
+    """Pin ``df`` as a persisted JVM ``RDD[Row]`` wrapped in a new frame.
+
+    ``persist`` keeps the RDD's lineage, so a lost block is recomputed.
+    Unlike ``DataFrame.persist`` it registers nothing in the session's
+    CacheManager: no later query with an equal plan reads it, and it is
+    freed like a ``localCheckpoint`` block, when unreferenced. The rows
+    stay in the JVM (no Python workers). The scan forgets the source's
+    output partitioning, so a consumer that needs it shuffles again.
+
+    The lineage, and the blocks and shuffle files it reaches, live as
+    long as the pinned frame, which is what recomputing a lost block
+    needs. A chain of pins (a loop) is cut after
+    ``_MAX_CHAINED_PINS``: by a reliable ``checkpoint`` when the
+    SparkContext has a checkpoint directory, which survives executor
+    loss, else by a ``localCheckpoint``, which does not. Reliable
+    checkpoint files stay in the directory unless
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set.
+    """
+    spark = df.sparkSession
+    jdf = df._jdf.toDF()  # toDF: spark.range() is a Dataset[Long], not of Row
+    depth = 1 + _chain_depth(jdf)
+    if depth > _MAX_CHAINED_PINS:
+        if spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
+            return df.checkpoint(eager=eager)
+        return df.localCheckpoint(eager=eager)
+    rows = jdf.rdd().setName(f"{_PIN_NAME}{depth}")  # the new frame's scan keeps the name
+    rows.persist(spark.sparkContext._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK_DESER))
     if eager:
-        pinned.count()
-    return pinned
+        rows.count()
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, jdf.schema()), spark)
+
+
+def _chain_depth(jdf) -> int:
+    """Longest chain of lineage pins under ``jdf``; 0 when it reads none."""
+    leaves = jdf.queryExecution().analyzed().collectLeaves()
+    depth = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            name = leaf.rdd().name() or ""
+            if name.startswith(_PIN_NAME):
+                depth = max(depth, int(name[len(_PIN_NAME):]))
+    return depth
 
 
 def cache_time_df(df: DataFrame) -> Tuple[DataFrame, float, int]:

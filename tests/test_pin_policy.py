@@ -1,10 +1,13 @@
 """``plans.tuning.pin``: the one materialization device.
 
 * the master decides the device (single JVM → ``localCheckpoint``,
-  anything else → ``persist(MEMORY_AND_DISK)`` with lineage kept);
+  anything else → a persisted RDD with its lineage kept);
+* the lineage device keeps the plan one scan deep, stays out of the
+  session's cache, recomputes lost blocks, and cuts a chain of pins at
+  its bound;
 * no module outside ``plans/tuning.py`` picks a device itself;
 * a query whose pins lived on lost executors still answers correctly
-  (``local-cluster`` subprocess, slow lane).
+  and releases its pins (``local-cluster`` subprocess, slow lane).
 """
 
 from __future__ import annotations
@@ -17,10 +20,10 @@ from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
-from pyspark import StorageLevel
 
+from rdsa_utils_spark.plans import tuning
 from rdsa_utils_spark.plans.audit import capture_lineage_cuts
-from rdsa_utils_spark.plans.tuning import _single_jvm, pin
+from rdsa_utils_spark.plans.tuning import _chain_depth, _pin_with_lineage, _single_jvm, pin
 from tests.conftest import jobs_in
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -50,25 +53,20 @@ class _Frame:
         self.calls.append(("localCheckpoint", eager))
         return self
 
-    def persist(self, level):
-        self.calls.append(("persist", level))
-        return self
-
-    def count(self):
-        self.calls.append(("count",))
-        return 0
-
 
 @pytest.mark.parametrize("eager", [False, True])
 @pytest.mark.parametrize("master", SINGLE_JVM[:2] + CLUSTER[:2])
-def test_device_follows_master(master, eager):
+def test_device_follows_master(master, eager, monkeypatch):
     df = _Frame(master)
+
+    def lineage(frame, eager):
+        frame.calls.append(("lineage", eager))
+        return frame
+
+    monkeypatch.setattr(tuning, "_pin_with_lineage", lineage)
     assert pin(df, eager=eager) is df
-    if _single_jvm(master):
-        assert df.calls == [("localCheckpoint", eager)]
-    else:
-        level = StorageLevel.MEMORY_AND_DISK
-        assert df.calls == [("persist", level)] + ([("count",)] if eager else [])
+    kind = "localCheckpoint" if _single_jvm(master) else "lineage"
+    assert df.calls == [(kind, eager)]
 
 
 def test_local_pin_is_a_lazy_local_checkpoint(spark):
@@ -89,6 +87,84 @@ def test_audit_hook_sees_every_pin(spark):
         df.transform(pin)
         df.transform(pin, eager=True)
     assert [s["kind"] for s in segments] == ["checkpoint", "checkpoint"]
+
+
+# -- the cluster device, run on the suite's local session -----------------
+
+
+def _persisted(spark) -> set:
+    ids = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return set(ids.split(",")) if ids else set()
+
+
+def _equal_query_reads_a_cache(spark) -> bool:
+    fresh = spark.range(40).selectExpr("id % 5 AS k", "CAST(id AS DECIMAL(10, 2)) AS v")
+    return "InMemoryRelation" in fresh._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_lineage_pin_is_a_scan_outside_the_cache(spark):
+    src = spark.range(40).selectExpr("id % 5 AS k", "CAST(id AS DECIMAL(10, 2)) AS v")
+    before = _persisted(spark)
+    pinned, jobs = jobs_in(spark, lambda: _pin_with_lineage(src, eager=False))
+    assert jobs == 0
+    _, jobs = jobs_in(spark, lambda: _pin_with_lineage(src, eager=True))
+    assert jobs == 1
+    assert pinned.schema == src.schema
+    assert sorted(pinned.collect()) == sorted(src.collect())
+    leaves = pinned._jdf.queryExecution().executedPlan().collectLeaves()
+    assert [leaves.apply(i).nodeName() for i in range(leaves.size())] == ["Scan ExistingRDD pin 1"]
+    # DataFrame.persist would make an equal query read the cached copy
+    assert not _equal_query_reads_a_cache(spark)
+    assert len(_persisted(spark) - before) == 2
+
+
+def test_lineage_pin_recomputes_dropped_blocks(spark):
+    """What an executor loss does to a pin's blocks, in one JVM: drop
+    them. A lineage pin recomputes them; a localCheckpoint cannot."""
+    src = spark.range(200).selectExpr("id % 7 AS k").groupBy("k").count()
+    want = sorted(src.collect())
+    block_master = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+
+    def drop_new_blocks(make):
+        before = _persisted(spark)
+        pinned = make()
+        pinned.collect()
+        for rdd_id in _persisted(spark) - before:
+            block_master.removeRdd(int(rdd_id), True)
+        return pinned
+
+    pinned = drop_new_blocks(lambda: _pin_with_lineage(src, eager=False))
+    assert sorted(pinned.collect()) == want
+    checkpointed = drop_new_blocks(lambda: src.localCheckpoint(eager=False))
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        checkpointed.collect()
+
+
+def test_chain_of_lineage_pins_is_cut_at_its_bound(spark, monkeypatch):
+    monkeypatch.setattr(tuning, "_MAX_CHAINED_PINS", 3)
+    df = spark.range(30).selectExpr("id AS v")
+    depths = []
+    for _ in range(5):
+        df = _pin_with_lineage(df.selectExpr("v + 1 AS v"), eager=False)
+        depths.append(_chain_depth(df._jdf))
+    # the fourth pin is a localCheckpoint (no checkpoint directory set)
+    assert depths == [1, 2, 3, 0, 1]
+    assert sorted(r.v for r in df.collect()) == list(range(5, 35))
+
+
+def test_chain_cut_is_reliable_with_a_checkpoint_dir(spark, monkeypatch, tmp_path):
+    monkeypatch.setattr(tuning, "_MAX_CHAINED_PINS", 1)
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        df = _pin_with_lineage(spark.range(10), eager=False)
+        cut = _pin_with_lineage(df.selectExpr("id * 2 AS id"), eager=True)
+        assert _chain_depth(cut._jdf) == 0
+        assert sorted(r.id for r in cut.collect()) == list(range(0, 20, 2))
+        assert any(p.name.startswith("rdd-") for p in tmp_path.rglob("*"))
+    finally:
+        # SparkContext has no public way to unset the directory
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
 
 
 # -- no device outside plans/tuning.py ------------------------------------
@@ -138,7 +214,9 @@ def test_guard_ignores_docstrings_and_comments(tmp_path):
 def test_query_survives_executor_loss(sf_dir):
     """Collect a pinned query on ``local-cluster``, replace both
     executors, collect again: the answer is unchanged and matches the
-    oracle (tools/executor_loss_probe.py)."""
+    oracle; neither the query nor three micro-batches leave entries in
+    the session's cache, and the batches' pins are released
+    (tools/executor_loss_probe.py)."""
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(filter(None, [str(ROOT), env.get("PYTHONPATH")]))
     proc = subprocess.run(
