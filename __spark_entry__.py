@@ -9037,8 +9037,10 @@ def q_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
        P(domain token 'spark' | length score round(n_tokens/100, 2)),
        a genuinely monotone relationship in this corpus; admit
        p_cal >= 0.75. Self-calibrated on the decontaminated stream —
-       deterministic, and the PAVA fit + step-function apply replay
-       in SQL via the minimax characterization.
+       deterministic. The engine fits PAV on the driver from one
+       bounded collect of the knot table; the oracle replays the fit
+       through PAV's minimax characterization, which gives the same
+       doubles, and the step-function apply as SQL.
     5. Token-budget mixture assembly (operators/sampling.py::
        token_budget_mix): src0/src1/src2 capped at 1200/2000/600
        TOKENS on the deterministic md5-uniform order.
@@ -11108,10 +11110,11 @@ FROM applied GROUP BY passed ORDER BY passed
 def q_isotonic_discount_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic calibration table (operators/classify.py::
     isotonic_calibrate): the non-decreasing least-squares fit of the
-    returned-flag rate against the discount, computed via PAV's
-    minimax characterization — one corpus groupBy, then pure algebra
-    on the 11-knot distinct-score table. The oracle replays prefix
-    sums, the i<=j pair grid and both running-extremum windows in SQL."""
+    returned-flag rate against the discount — one corpus groupBy, one
+    collect of the 11-knot distinct-score table, and a driver-side
+    pool-adjacent-violators fit. The oracle replays PAV's minimax
+    characterization (prefix sums, the i<=j pair grid and both
+    running-extremum windows) in SQL, which gives the same doubles."""
     from rdsa_utils_spark.operators.classify import isotonic_calibrate
 
     li = _t(spark, sf_dir, "lineitem")

@@ -14,6 +14,7 @@ engine replays the whole train→predict pipeline bit-for-bit (see the
 
 from __future__ import annotations
 
+import math
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
@@ -516,8 +517,6 @@ def train_logreg_hashed(
     # is rounded like every other weight, so replay stays bit-exact.
     n_pos = int(stats["np"] or 0)
     if 0 < n_pos < n:
-        import math
-
         b0 = _round_half_up(math.log(n_pos / float(n - n_pos)), weight_round)
     else:
         b0 = 0.0  # degenerate single-class frame: sigmoid(0) start
@@ -911,8 +910,6 @@ def platt_scale_train(
     lineage runs once, not once per iteration. Labels must be 0/1;
     NULL scores/labels are excluded.
     """
-    import math
-
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if lr <= 0:
@@ -1049,30 +1046,36 @@ def isotonic_calibrate(
     :func:`platt_scale_train` (Platt assumes a sigmoid shape; isotonic
     assumes only monotonicity, the property a sane scorer must have).
     Returns the calibration TABLE ``(score, n, n_pos, p_cal)`` over
-    the quantized distinct scores, ``p_cal`` non-decreasing in
-    ``score``; apply it to new data with :func:`isotonic_apply`.
+    the quantized distinct scores, in score order, ``p_cal``
+    non-decreasing in ``score``; apply it to new data with
+    :func:`isotonic_apply`.
 
-    Instead of the sequential pool-adjacent-violators walk (driver
-    state, not replayable), the fit is computed from PAV's minimax
-    characterization — ``iso(k) = max_{i<=k} min_{j>=k} avg(y[i..j])``
-    (Robertson, Wright & Dykstra 1988, *Order Restricted Statistical
-    Inference*, thm 1.4.4) — as pure DataFrame algebra: prefix sums
-    over the distinct-score table, an ``i <= j`` pair grid, and two
-    PARTITIONED running-extremum windows. Every quantity is a ratio of
-    integer sums, so a DuckDB oracle replays the fit bit-for-bit.
+    The fit is the sequential pool-adjacent-violators walk over the
+    distinct-score table, run on the driver. Each block's value is
+    ``float(n_pos) / float(n)`` of its exact integer sums: the block
+    mean rounded once. PAV's minimax characterization —
+    ``iso(k) = max_{i<=k} min_{j>=k} avg(y[i..j])`` (Robertson, Wright
+    & Dykstra 1988, *Order Restricted Statistical Inference*, thm
+    1.4.4) — names the same rational, and rounding is monotone, so it
+    commutes with the min and max: a DuckDB oracle that replays the
+    minimax over double ratios of integer prefix sums matches
+    bit-for-bit. The final ``round(p, round_to) + 0.0`` runs in Spark,
+    so Spark's HALF_UP rounding applies.
 
     100 TB posture: the corpus is touched by exactly ONE map-side-
-    combined groupBy on the quantized score; everything after runs on
-    the distinct-score table, whose size k is bounded by the
-    quantization grid (``score_round=4`` on a [0,1] score means at
-    most 10,001 rows; 11 rows -> 121 for typical discrete scores).
-    The pair grid is O(k²) — a HARD ceiling enforced by ``max_knots``
-    (k(k+1)/2 ≈ 5·10⁷ grid rows at the default 10,000), raising like
-    :func:`isotonic_apply`'s ``max_grid`` rather than letting a
-    wide-range score quietly quadratic-explode: lower ``score_round``
-    or rescale the score into a bounded range. The grid is a
-    broadcast range self-join over that bounded frame (allowlisted
-    like the other bounded attaches); no window ever sees raw rows.
+    combined groupBy on the quantized score; its distinct-score table,
+    whose size k is bounded by the quantization grid (``score_round=4``
+    on a [0,1] score means at most 10,001 rows; 11 rows for typical
+    discrete scores), comes to the driver in ONE ordered collect
+    capped at ``max_knots + 1`` rows. ``max_knots`` bounds that
+    collect: more distinct scores raise like :func:`isotonic_apply`'s
+    ``max_grid`` rather than pull a wide-range score onto the driver —
+    lower ``score_round`` or rescale the score into a bounded range.
+    The fit is O(k), comparing block means by exact integer
+    cross-multiplication; there is no pair grid, window or join. The
+    table comes back as a local relation (an inline ``VALUES`` table,
+    built the same way whether Arrow is on or off), so reading or
+    applying it launches no Spark job.
     Labels must be 0/1; NULL scores/labels are excluded.
     """
     if score_round < 0:
@@ -1080,7 +1083,7 @@ def isotonic_calibrate(
     if max_knots < 1:
         raise ValueError(f"max_knots must be >= 1, got {max_knots}")
     y = F.col(label_col).cast("double")
-    g = (
+    rows = (
         df.select(
             F.round(F.col(score_col).cast("double"), score_round).alias("__s"),
             y.alias("__y"),
@@ -1091,77 +1094,54 @@ def isotonic_calibrate(
             F.count(F.lit(1)).alias("n"),
             F.sum("__y").cast("long").alias("n_pos"),
         )
-        .transform(pin)  # bounded; consumed by 2 branches
+        .orderBy("__s")
+        .limit(max_knots + 1)
+        .collect()
     )
-    k = g.count()
-    if k > max_knots:
+    if len(rows) > max_knots:
         raise ValueError(
-            f"isotonic_calibrate: {k} distinct quantized scores exceed "
-            f"max_knots={max_knots} — the PAV pair grid is O(k²) "
-            f"({k * (k + 1) // 2} rows here); lower score_round or "
-            f"rescale the score into a bounded range",
+            f"isotonic_calibrate: more than max_knots={max_knots} distinct "
+            f"quantized scores; lower score_round or rescale the score "
+            f"into a bounded range",
         )
-    # Inclusive prefix sums over the (bounded) distinct-score table —
-    # constant non-foldable partition key keeps the single-partition
-    # plan but silences the per-execution WindowExec warning (r12).
-    from rdsa_utils_spark.operators.windows import constant_partition_key
+    # Pool adjacent violators: blocks of [n, n_pos, knots], merged while
+    # the left block's mean exceeds the right one's (n_pos/n compared by
+    # cross-multiplying the integer sums, so no rounding decides a merge).
+    blocks: list[list[int]] = []
+    for r in rows:
+        blocks.append([r["n"], r["n_pos"], 1])
+        while len(blocks) > 1 and (
+            blocks[-2][1] * blocks[-1][0] > blocks[-1][1] * blocks[-2][0]
+        ):
+            n, n_pos, knots = blocks.pop()
+            blocks[-1][0] += n
+            blocks[-1][1] += n_pos
+            blocks[-1][2] += knots
+    fitted = [
+        float(n_pos) / float(n)
+        for n, n_pos, knots in blocks
+        for _ in range(knots)
+    ]
+    values = ", ".join(
+        f"({_sql_double(r['__s'])}, {r['n']}L, {r['n_pos']}L, {_sql_double(p)})"
+        for r, p in zip(rows, fitted)
+    )
+    # VALUES needs one row: an empty fit keeps the schema with a typed
+    # placeholder row that the filter drops.
+    where = ""
+    if not rows:
+        values, where = "(CAST(NULL AS DOUBLE), 0L, 0L, 0.0D)", " WHERE false"
+    return df.sparkSession.sql(
+        f"SELECT score, n, n_pos, round(iso, {int(round_to)}) + 0.0D AS p_cal "
+        f"FROM VALUES {values} AS t(score, n, n_pos, iso){where}",
+    )
 
-    w_pre = Window.partitionBy(constant_partition_key("__s")).orderBy(
-        "__s",
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    p = g.select(
-        "__s",
-        "n",
-        "n_pos",
-        F.sum("n").over(w_pre).alias("__cn"),
-        F.sum("n_pos").over(w_pre).alias("__cp"),
-    ).transform(pin)
-    lhs = p.select(
-        F.col("__s").alias("si"),
-        (F.col("__cp") - F.col("n_pos")).alias("__cp_lt"),
-        (F.col("__cn") - F.col("n")).alias("__cn_lt"),
-    )
-    rhs = p.select(
-        F.col("__s").alias("sj"),
-        F.col("__cp").alias("__cp_j"),
-        F.col("__cn").alias("__cn_j"),
-    )
-    # avg(y over scores in [si, sj]) as a ratio of exact integer sums.
-    pairs = F.broadcast(lhs).join(rhs, F.col("si") <= F.col("sj")).select(
-        "si",
-        "sj",
-        (
-            (F.col("__cp_j") - F.col("__cp_lt")).cast("double")
-            / (F.col("__cn_j") - F.col("__cn_lt")).cast("double")
-        ).alias("__a"),
-    )
-    # min over j >= k (per i), then max over i <= k (per k): minimax.
-    w_min = (
-        Window.partitionBy("si")
-        .orderBy(F.col("sj").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_max = (
-        Window.partitionBy("sj")
-        .orderBy(F.col("si").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    iso = (
-        pairs.withColumn("__mn", F.min("__a").over(w_min))
-        .withColumn("__iso", F.max("__mn").over(w_max))
-        .filter(F.col("si") == F.col("sj"))
-        .select(F.col("sj").alias("__s"), "__iso")
-    )
-    return (
-        g.join(iso, "__s")
-        .select(
-            F.col("__s").alias("score"),
-            "n",
-            "n_pos",
-            (F.round(F.col("__iso"), round_to) + F.lit(0.0)).alias("p_cal"),
-        )
-        .orderBy("score")
-    )
+
+def _sql_double(x: float) -> str:
+    """A SQL literal that parses to exactly the double ``x``."""
+    if math.isfinite(x):
+        return f"{x!r}D"
+    return f"CAST('{x}' AS DOUBLE)"
 
 
 def isotonic_apply(
@@ -1216,11 +1196,20 @@ def isotonic_step_expr(
     re-executing the calibration plan per application, which would
     both cost a driver round-trip per batch and silently re-read a
     mutated calibration source mid-stream.
+
+    The knots are sorted on the driver, not by a Spark sort: a table
+    from :func:`isotonic_calibrate` is a local relation, which this
+    collect reads without launching a job (a Sort over it would still
+    plan an exchange), and a table from any other source is
+    knot-sized anyway.
     """
-    rows = calibration.select("score", "p_cal").orderBy("score").collect()
+    rows = calibration.select("score", "p_cal").collect()
     if not rows:
         raise ValueError("isotonic_step_expr: empty calibration table")
-    knots = [(float(r["score"]), float(r["p_cal"])) for r in rows]
+    knots = sorted(
+        ((float(r["score"]), float(r["p_cal"])) for r in rows),
+        key=lambda kv: kv[0],
+    )
     factor = 10 ** score_round
     lo = knots[0][0]
     size = int(round((knots[-1][0] - lo) * factor)) + 1

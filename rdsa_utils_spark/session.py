@@ -65,6 +65,10 @@ _COMMON_CONFIGS: dict[str, str] = {
     # TimestampType (LTZ) with a UTC session zone, so read the legacy way.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.timestampType": "TIMESTAMP_LTZ",
+    # PySpark 4 wraps every functions.* and DataFrame call to record its
+    # Python call site for error query contexts, at 4 extra JVM round
+    # trips per call. Errors stay typed; only the call-site line is lost.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -153,6 +157,17 @@ def create_spark_session(
     enable_hive
         Add Hive catalog support (reference always enables it; we make
         it opt-in since local tests run on parquet files).
+
+    Every profile turns off PySpark's DataFrame debugging
+    (``spark.python.sql.dataFrameDebugging.enabled=false``), which
+    records the Python call site of every ``functions.*`` and
+    ``DataFrame`` call in extra JVM round trips. Errors keep their
+    types (a missing column still raises ``AnalysisException``); only
+    the Python call-site line in the error's query context is lost.
+    PySpark reads the setting once per process, at the first wrapped
+    call made while a session is active, so it takes effect only when
+    it is set at build: pass ``"true"`` in ``extra_configs`` to keep
+    call sites, and changing it on a running session does nothing.
     """
     builder = SparkSession.builder.appName(app_name)
 

@@ -51,9 +51,11 @@ def write_stream_quality_gate(
     operator's stated contract).
 
     The calibration table is collected ONCE at gate construction into
-    the projection literal (it is knot-table-sized by the
-    ``isotonic_calibrate`` contract), so per-batch cost is one
-    codegen'd map over the batch — zero joins/shuffles/state. To
+    the projection literal. It is knot-table-sized: ``isotonic_calibrate``
+    caps it at ``max_knots`` rows and returns it as a local relation, so
+    that collect launches no Spark job, and the knots are sorted on the
+    driver. Per-batch cost is one codegen'd map over the batch — zero
+    joins/shuffles/state. To
     re-calibrate, stop the gate and start a new one; a live gate
     deliberately never re-reads the table (silent mid-stream policy
     drift would make admitted output irreproducible).

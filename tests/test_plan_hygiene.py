@@ -66,7 +66,6 @@ _BNLJ_OK = {
     "dedup_incremental_bloom",  # 1-row Bloom-bitmap attach (getbit probe)
     "bloom_filtered_orders",  # same 1-row Bloom-bitmap attach (bloom_semi_join)
     "woe_priority_fulfilled",  # 1-row (pos/neg/K totals) attach (woe_iv)
-    "isotonic_discount_returns",  # i<=j grid over the bounded knot table
     "pq_topk_replay",         # ADC scan IS broadcast query-LUTs × corpus codes
     "nb_confusion",           # |labels|-row cross + 1-row vocab scalar attach
     "hybrid_search",          # inherits bm25_search's 1-row corpus-stats attach
@@ -89,11 +88,6 @@ _BNLJ_OK = {
     "silhouette_labels",      # k-row (10) centroid table attach
     "doremi_mix",             # 1-row mixture-mean / weight-total attach
                               # per multiplicative-weights step
-    "calibrated_gate_discounts",  # isotonic knot-grid attach inside the
-                              # construction-time fit segment (bounded:
-                              # ≤ distinct 2-dp scores ≤ 201 rows)
-    "curation_e2e",           # same knot-grid attach (stage-4 isotonic
-                              # fit segment; bound as above)
     "neyman_customer_sample",  # 1-row grand-totals attach onto the
                               # |strata|-row allocation table (visible in
                               # the construction segment since the
@@ -109,19 +103,6 @@ _GLOBAL_WINDOW_OK = {
     "cumulative_new_users": "running sum over ONE ROW PER DAY (calendar-bounded)",
     "hybrid_search": "RRF ranks over two top-10 frames (≤ 10 rows each)",
     "chained_price_index": "chain product over ONE ROW PER PERIOD",
-    "isotonic_discount_returns": (
-        "prefix sums over the quantized knot table "
-        "(≤ distinct 2-dp scores ≤ 201 rows)"
-    ),
-    "calibrated_gate_discounts": (
-        "isotonic fit segment: prefix sums over the quantized knot "
-        "table (≤ distinct 2-dp scores ≤ 201 rows)"
-    ),
-    "curation_e2e": (
-        "stage-4 isotonic fit segment: prefix sums over the quantized "
-        "length-score knot table (≤ distinct round(n_tokens/100, 2) "
-        "values — hundreds of rows at any corpus size)"
-    ),
     "zipf_tokens": "row_number over the top-k term frame (top_k=200 LIMIT)",
 }
 

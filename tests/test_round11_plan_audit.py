@@ -121,8 +121,7 @@ def test_capture_restores_methods(spark):
 
 def test_audit_query_sees_curation_e2e_scans(spark):
     """The round-10 verdict's done-criterion: the flagship composition
-    must report its real parquet scans and its (bounded, allowlisted)
-    global window instead of a bare RDD scan."""
+    must report its real parquet scans instead of a bare RDD scan."""
     rec = audit_query(
         entrymod.queries()["curation_e2e"], spark, "/root/testdata/sf0.001",
     )

@@ -1,12 +1,14 @@
 """Round-13 optimization internals: data-derived parallelism floor
-(plans/tuning.py::ensure_parallelism) and the machine-derived local
-driver heap (session.py local profile)."""
+(plans/tuning.py::ensure_parallelism), the machine-derived local
+driver heap (session.py local profile) and the session-wide switch-off
+of PySpark's per-call call-site capture."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from rdsa_utils_spark.plans.tuning import (
@@ -14,7 +16,9 @@ from rdsa_utils_spark.plans.tuning import (
     _spread_task_bytes,
     ensure_parallelism,
 )
-from rdsa_utils_spark.session import _default_driver_memory
+from rdsa_utils_spark.session import _COMMON_CONFIGS, _default_driver_memory
+
+_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def _cores(spark) -> int:
@@ -124,3 +128,17 @@ def test_default_heap_respects_cgroup_limit(monkeypatch):
 
     monkeypatch.setattr(session, "_cgroup_memory_limit", lambda: 6 << 30)
     assert session._default_driver_memory() == "1g"
+
+
+def test_common_configs_turn_off_call_site_capture():
+    assert _COMMON_CONFIGS[_DEBUGGING] == "false"
+
+
+def test_session_reads_call_site_capture_back_as_off(spark):
+    assert spark.conf.get(_DEBUGGING) == "false"
+
+
+def test_errors_stay_typed_without_call_site_capture(spark):
+    # Only the Python call-site line of the query context is lost.
+    with pytest.raises(AnalysisException):
+        spark.range(1).select("no_such_column")

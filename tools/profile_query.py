@@ -8,6 +8,9 @@ For each named query (default: the N slowest from BENCH_DETAIL.json):
 * counts Spark JOBS, STAGES and TASKS the query triggers per run and
   sums executor task runtime (from the JVM AppStatusStore), so
   scheduling overhead vs compute is visible without the UI;
+* for construction alone, counts the jobs it launches and the py4j
+  round trips it makes (and the seconds spent in them), the floor a
+  query pays before it runs;
 * optionally dumps ``.explain("formatted")`` to plans/r12/<q>_<tag>.txt.
 
 Usage:
@@ -17,6 +20,7 @@ Usage:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -45,6 +49,38 @@ def _store_totals(spark):
         n_tasks += s.numCompleteTasks()
         task_ms += s.executorRunTime()
     return n_jobs, n_stages, n_tasks, task_ms
+
+
+@contextlib.contextmanager
+def _py4j_trips():
+    """Count the py4j round trips made inside the block, and the
+    seconds spent in them, by wrapping ``send_command`` on both py4j
+    connection classes (pinned-thread and classic gateway modes)."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    stats = {"trips": 0, "s": 0.0}
+
+    def counted(real):
+        def send_command(self, command):
+            t0 = time.perf_counter()
+            try:
+                return real(self, command)
+            finally:
+                stats["trips"] += 1
+                stats["s"] += time.perf_counter() - t0
+
+        return send_command
+
+    classes = (ClientServerConnection, GatewayConnection)
+    reals = [cls.send_command for cls in classes]
+    for cls, real in zip(classes, reals):
+        cls.send_command = counted(real)
+    try:
+        yield stats
+    finally:
+        for cls, real in zip(classes, reals):
+            cls.send_command = real
 
 
 def main() -> None:
@@ -93,9 +129,11 @@ def main() -> None:
         cons, writes, jobs, stages, tasks, task_ms = [], [], [], [], [], []
         for _ in range(runs):
             j0, s0, t0n, m0 = _store_totals(spark)
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
+            with _py4j_trips() as trips:
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                t1 = time.perf_counter()
+            construct_jobs = _store_totals(spark)[0] - j0
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             j1, s1, t1n, m1 = _store_totals(spark)
@@ -119,6 +157,9 @@ def main() -> None:
         cons.sort(); writes.sort()
         rec = {
             "construct_s": round(cons[len(cons) // 2], 3),
+            "construct_jobs": construct_jobs,
+            "construct_py4j_trips": trips["trips"],
+            "construct_py4j_s": round(trips["s"], 3),
             "write_s": round(writes[len(writes) // 2], 3),
             "total_s": round(cons[len(cons) // 2] + writes[len(writes) // 2], 3),
             "jobs": jobs[-1],
