@@ -91,8 +91,8 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Dimension tables broadcast; the fact table only shuffles for the
     # final aggregation (map-side partials first).
     dims = (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        customer.join(nation, customer.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .select("c_custkey", "n_name", "r_name")
     )
     facts = (
@@ -104,6 +104,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey", "l_extendedprice", "l_discount")
     )
     return (
+        # broadcast: Catalyst estimates the customer-nation-region join as the product of its inputs
         facts.join(F.broadcast(dims), facts.o_custkey == dims.c_custkey)
         .groupBy("r_name", "n_name")
         .agg(
@@ -352,7 +353,7 @@ def q_weighted_avg_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         on="o_custkey",
         how="inner",
-    ).join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+    ).join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
     shared = joined.withColumn(
         "w_share", get_weight_shares(F.col("n_orders").cast("double"), "n_name"),
     )
@@ -1177,7 +1178,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
@@ -1209,7 +1210,7 @@ def q_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(nation, customer.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
@@ -1390,7 +1391,7 @@ def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp")),
     )
     disc = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,6)")
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    joined = li.join(part, li.l_partkey == part.p_partkey)
     return joined.agg(
         F.round(
             F.lit(100.0)
@@ -1422,8 +1423,8 @@ def q_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part").filter(F.col("p_size") > 40)
     excl = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
-        li.join(F.broadcast(part.select("p_partkey", "p_brand")), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(excl), li.l_suppkey == excl.s_suppkey, "left_anti")
+        li.join(part.select("p_partkey", "p_brand"), li.l_partkey == part.p_partkey)
+        .join(excl, li.l_suppkey == excl.s_suppkey, "left_anti")
         .groupBy("p_brand")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(F.col("supplier_cnt").desc(), F.col("p_brand").asc())
@@ -1447,12 +1448,13 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — no recomputation per row."""
     part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
     li = _t(spark, sf_dir, "lineitem")
-    sel = li.join(F.broadcast(part.select("p_partkey")), li.l_partkey == part.p_partkey)
+    sel = li.join(part.select("p_partkey"), li.l_partkey == part.p_partkey)
     thr = sel.groupBy("p_partkey").agg(
         (F.lit(0.2) * F.sum(F.col("l_quantity").cast("decimal(38,6)")).cast("double")
          / F.count(F.lit(1))).alias("qty_thr"),
     )
     return (
+        # broadcast: Catalyst sizes this aggregate as the lineitem-part join under it, a product of its inputs
         sel.join(F.broadcast(thr), "p_partkey")
         .filter(F.col("l_quantity") < F.col("qty_thr"))
         .agg(
@@ -1514,7 +1516,7 @@ def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-join with codegen."""
     part = _t(spark, sf_dir, "part")
     li = _t(spark, sf_dir, "lineitem")
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    joined = li.join(part, li.l_partkey == part.p_partkey)
     cond = (
         ((F.col("p_brand") == "Brand#1") & (F.col("p_size").between(1, 15)) & (F.col("l_quantity").between(1, 20)))
         | ((F.col("p_brand") == "Brand#2") & (F.col("p_size").between(10, 30)) & (F.col("l_quantity").between(10, 35)))
@@ -1547,7 +1549,7 @@ def q_rich_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
-        .crossJoin(F.broadcast(avg_bal))
+        .crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .groupBy("c_mktsegment")
         .agg(
@@ -2490,9 +2492,9 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(n1, F.col("s_nationkey") == F.col("s_nkey"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nkey"))
         .filter(pair)
         .withColumn("l_year", F.year("l_shipdate"))
         .groupBy("supp_nation", "cust_nation", "l_year")
@@ -2539,11 +2541,11 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nkey"))
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(cn, F.col("c_nationkey") == F.col("c_nkey"))
+        .join(sn, F.col("s_nationkey") == F.col("s_nkey"))
         .join(
-            F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
+            region.filter(F.col("r_name") == "EUROPE"),
             F.col("c_rkey") == F.col("r_regionkey"),
         )
         .withColumn("o_year", F.year("o_orderdate"))
@@ -2598,10 +2600,10 @@ def q_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.lit(0.5) * F.col("p_retailprice") * F.col("l_quantity")
     )
     return (
-        li.join(F.broadcast(part.select("p_partkey", "p_retailprice")),
+        li.join(part.select("p_partkey", "p_retailprice"),
                 li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(nation, F.col("s_nationkey") == nation.n_nationkey)
         .withColumn("o_year", F.year("l_shipdate"))
         .groupBy(F.col("n_name").alias("nation"), "o_year")
         .agg(_dsum(profit, "sum_profit"))
@@ -2636,9 +2638,9 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_rev = rev.agg(F.max("total_revenue").alias("max_revenue"))
     return (
-        rev.crossJoin(F.broadcast(max_rev))
+        rev.crossJoin(max_rev)
         .filter(F.col("total_revenue") == F.col("max_revenue"))
-        .join(F.broadcast(supplier), rev.l_suppkey == supplier.s_suppkey)
+        .join(supplier, rev.l_suppkey == supplier.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
     )
@@ -3364,8 +3366,8 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     eur_suppliers = (
-        supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        supplier.join(nation, supplier.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .filter(F.col("r_name") == "EUROPE")
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
@@ -3373,7 +3375,8 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey", "p_brand", "p_size",
     )
     offers = (
-        li.join(F.broadcast(std_parts), li.l_partkey == F.col("p_partkey"))
+        li.join(std_parts, li.l_partkey == F.col("p_partkey"))
+        # broadcast: Catalyst estimates the supplier-nation-region join as the product of its inputs
         .join(F.broadcast(eur_suppliers), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("p_partkey", "p_brand", "p_size", "s_suppkey", "s_name", "s_acctbal", "n_name")
         .agg(
@@ -3438,7 +3441,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     asia_nations = (
-        nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        nation.join(region, nation.n_regionkey == region.r_regionkey)
         .filter(F.col("r_name") == "ASIA")
         .select("n_nationkey", "n_name")
     )
@@ -3449,11 +3452,11 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders.filter(yr), li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
         .join(
-            F.broadcast(supplier),
+            supplier,
             (li.l_suppkey == supplier.s_suppkey)
             & (customer.c_nationkey == supplier.s_nationkey),
         )
-        .join(F.broadcast(asia_nations), supplier.s_nationkey == F.col("n_nationkey"))
+        .join(asia_nations, supplier.s_nationkey == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
         .orderBy(F.desc("revenue"), "n_name")
@@ -3491,11 +3494,12 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = _t(spark, sf_dir, "supplier")
     nation = _t(spark, sf_dir, "nation")
     nat_sup = (
-        supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
+        supplier.join(nation, supplier.s_nationkey == nation.n_nationkey)
         .filter(F.col("n_name") == "NATION_7")
         .select("s_suppkey")
     )
     value = (
+        # broadcast: Catalyst estimates the supplier-nation join as the product of its inputs
         li.join(F.broadcast(nat_sup), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(_dsum(F.col("l_extendedprice") * F.col("l_quantity"), "part_value"))
@@ -3505,7 +3509,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("part_value").cast("decimal(38,6)")).cast("double").alias("__total__"),
     )
     return (
-        value.crossJoin(F.broadcast(total))
+        value.crossJoin(total)
         .filter(F.col("part_value") > F.col("__total__") * 0.001)
         .select("l_partkey", "part_value")
         .orderBy(F.desc("part_value"), "l_partkey")
@@ -3590,7 +3594,7 @@ def q_part_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qty = (
         li.filter(yr)
-        .join(F.broadcast(red), li.l_partkey == F.col("p_partkey"))
+        .join(red, li.l_partkey == F.col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(38,6)")).cast("double").alias("qty"))
         .transform(pin)
@@ -3599,14 +3603,14 @@ def q_part_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.expr("percentile(qty, 0.5)"), 6).alias("__median__"),
     )
     heavy = (
-        qty.crossJoin(F.broadcast(threshold))
+        qty.crossJoin(threshold)
         .filter(F.col("qty") > F.col("__median__"))
         .select("l_suppkey")
         .distinct()
     )
     return (
         supplier.join(heavy, supplier.s_suppkey == heavy.l_suppkey, "left_semi")
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
+        .join(nation, supplier.s_nationkey == nation.n_nationkey)
         .filter(F.col("n_name") == "NATION_3")
         .select("s_name", "s_acctbal")
         .orderBy("s_name")
@@ -4681,7 +4685,7 @@ def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = pagerank(edges, "src", "dst", weight="w", iterations=5)
     n_nodes = ranks.agg(F.count(F.lit(1)).cast("double").alias("__n"))
     return (
-        ranks.crossJoin(F.broadcast(n_nodes))  # 1-row stats attach
+        ranks.crossJoin(n_nodes)  # 1-row stats attach
         .select(
             F.col("node").alias("part"),
             F.round(F.col("rank") * F.col("__n"), 6).alias("rank_scaled"),
@@ -4922,9 +4926,7 @@ def q_brand_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
-    j = li.join(
-        F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"),
-    )
+    j = li.join(part, F.col("l_partkey") == F.col("p_partkey"))
     return cooccurrence_pairs(j, "l_orderkey", "p_brand", min_count=2).orderBy(
         "item_a", "item_b",
     )
@@ -4952,9 +4954,7 @@ def q_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
-    j = li.join(
-        F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"),
-    )
+    j = li.join(part, F.col("l_partkey") == F.col("p_partkey"))
     # Pinned: triangle_count references its edge frame three times
     # (one leg per triangle side), so an unpinned 40-row frame would
     # replay the corpus-sized co-occurrence upstream once per leg.
@@ -5219,7 +5219,7 @@ def q_dominant_brand_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-task scan (round-12 profile)
     li = _spread(_t(spark, sf_dir, "lineitem"), "l_orderkey")
     part = _t(spark, sf_dir, "part")
-    j = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+    j = li.join(part, F.col("l_partkey") == F.col("p_partkey"))
     return dominance_flags(
         j, ["p_brand"], "l_suppkey", "l_extendedprice", n=2, p=0.2,
     ).orderBy("p_brand")
@@ -7800,7 +7800,7 @@ def q_cuped_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdsa_utils_spark.operators.stats import cuped_adjust
 
     joined = orders.join(
-        F.broadcast(cust.select("c_custkey", "c_acctbal")),
+        cust.select("c_custkey", "c_acctbal"),
         orders["o_custkey"] == cust["c_custkey"],
     )
     adj = cuped_adjust(joined, "o_totalprice", "c_acctbal")
@@ -9268,7 +9268,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("cluster_id"), F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") >= 2)
     )
-    clusters = docs.join(F.broadcast(groups), "fingerprint").select(
+    clusters = docs.join(groups, "fingerprint").select(
         F.col("doc_id").alias("id"), "cluster_id",
     )
     return (
@@ -9814,6 +9814,7 @@ def q_ndcg_termscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars", F.lower(F.col("text")).alias("__t__")
     )
     tf = (
+        # broadcast: createDataFrame over driver rows is an RDD scan with no size statistic
         lowered.join(F.broadcast(qtab))
         .select(
             "query_id",
@@ -10138,6 +10139,7 @@ def _termscan_runs_qrels(spark: SparkSession, sf_dir: str):
         "doc_id", "n_chars", F.lower(F.col("text")).alias("__t__")
     )
     tf = (
+        # broadcast: createDataFrame over driver rows is an RDD scan with no size statistic
         lowered.join(F.broadcast(qtab))
         .select(
             "query_id",
@@ -11423,8 +11425,8 @@ def q_brand_bt_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     bw = part.select(F.col("p_partkey").alias("pw"), F.col("p_brand").alias("brand_w"))
     bl = part.select(F.col("p_partkey").alias("pl"), F.col("p_brand").alias("brand_l"))
     pairs = (
-        duels.join(F.broadcast(bw), "pw")
-        .join(F.broadcast(bl), "pl")
+        duels.join(bw, "pw")
+        .join(bl, "pl")
         .filter(F.col("brand_w") != F.col("brand_l"))
     )
     return bt_ratings(pairs, "brand_w", "brand_l", iterations=6)
@@ -11534,8 +11536,8 @@ def q_win_rate_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey").alias("pl"), F.col("p_brand").alias("brand_l"),
     )
     pairs = (
-        duels.join(F.broadcast(bw), "pw")
-        .join(F.broadcast(bl), "pl")
+        duels.join(bw, "pw")
+        .join(bl, "pl")
         .filter(F.col("brand_w") != F.col("brand_l"))
     )
     return win_rate_matrix(

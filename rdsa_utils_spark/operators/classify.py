@@ -127,8 +127,9 @@ def train_naive_bayes(
     s = F.lit(float(smoothing))
     denom = F.col("__n__") + s * F.col("__v__")
     model = (
+        # broadcast: label_totals reads the counts pin, and a cluster pin's scan has no size statistic
         counts.join(F.broadcast(label_totals), "label")
-        .join(F.broadcast(vocab))
+        .join(vocab)
         .select(
             "label",
             "token",
@@ -138,8 +139,9 @@ def train_naive_bayes(
         )
     )
     priors = (
+        # broadcast: Catalyst estimates the label-totals join as the product of its inputs
         doc_counts.join(F.broadcast(label_totals), "label")
-        .join(F.broadcast(vocab))
+        .join(vocab)
         .select(
             "label",
             (
@@ -183,7 +185,9 @@ def naive_bayes_score(
     )
     lab = priors.select("label", "log_default")
     scored = (
+        # broadcast: priors is a join, which Catalyst estimates as the product of its inputs
         tok.crossJoin(F.broadcast(lab))
+        # broadcast: the model reads the counts pin, and a cluster pin's scan has no size statistic
         .join(F.broadcast(model), ["token", "label"], "left")
         .groupBy("__id", "label")
         .agg(
@@ -195,7 +199,7 @@ def naive_bayes_score(
         )
     )
     total = (
-        scored.join(F.broadcast(priors.select("label", "log_prior")), "label")
+        scored.join(priors.select("label", "log_prior"), "label")
         .select(
             "__id",
             "label",
@@ -328,7 +332,7 @@ def target_encode_kfold(
     oof = (
         kf.join(key_tot, key_col)
         .join(fold_tot, fold_col)
-        .crossJoin(F.broadcast(grand))
+        .crossJoin(grand)
         .select(
             key_col,
             fold_col,
@@ -713,6 +717,7 @@ def logreg_score_hashed(
         F.col("weight").alias("__b"),
     )
     dots = (
+        # broadcast: trained weights are driver-built rows, an RDD scan with no size statistic
         feats.join(F.broadcast(wf), "feature")
         .groupBy("__doc")
         .agg(
@@ -727,6 +732,7 @@ def logreg_score_hashed(
     return (
         df.join(dots, df[id_col] == dots["__doc"], "left")
         .drop("__doc")
+        # broadcast: the bias row is a filter over an RDD scan with no size statistic
         .crossJoin(F.broadcast(bias))
         .withColumn(
             out_col,
@@ -1019,7 +1025,7 @@ def woe_iv(
     dn = (F.col("n_neg") + lap) / (F.col("__tn") + lap * F.col("__k"))
     woe = F.log(dp / dn)
     return (
-        grouped.crossJoin(F.broadcast(totals))
+        grouped.crossJoin(totals)
         .select(
             feature_col,
             "n_pos",

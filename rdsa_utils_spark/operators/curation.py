@@ -135,7 +135,7 @@ def dsir_bucket_ratios(
         - F.log((F.col("__rc").cast("double") + F.lit(a)) / (F.col("__rtot").cast("double") + F.lit(ab)))
     )
     return (
-        joined.crossJoin(F.broadcast(tot))
+        joined.crossJoin(tot)
         .select(
             "bucket",
             F.round(ratio * F.lit(_LOGW_SCALE)).cast("long").alias("ratio_unats"),
@@ -171,6 +171,7 @@ def dsir_log_weights(
     terms = _doc_terms(raw_df, id_col, text_col, use_bigrams)
     per_doc = (
         terms.select("__id", _bucket(F.col("__term"), n_buckets).alias("bucket"))
+        # broadcast: Catalyst estimates the bucket-ratio joins as the product of their inputs
         .join(F.broadcast(ratios), "bucket")
         .groupBy("__id")
         .agg(F.sum("ratio_unats").alias("__unats"))
@@ -614,7 +615,7 @@ def doremi_reweight(
         )
         raw = (
             state.join(base.select("domain", "mean_loss"), "domain")
-            .crossJoin(F.broadcast(mix))
+            .crossJoin(mix)
             .select(
                 "domain",
                 "__ws",
@@ -637,7 +638,7 @@ def doremi_reweight(
         )
         w_new = F.round(F.col("__raw") / F.col("__t"), weight_round)
         state = (
-            raw.crossJoin(F.broadcast(tot))
+            raw.crossJoin(tot)
             .select(
                 "domain",
                 w_new.alias("__w"),

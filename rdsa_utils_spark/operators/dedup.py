@@ -939,6 +939,7 @@ def dedup_against_corpus_bloom(
     # stores one incremental batch INCLUDING payload columns (never
     # the corpus) — cheaper than a second full fingerprint scan.
     flagged = (
+        # broadcast: the bitmap is driver-built rows, an RDD scan with no size statistic
         new_fp.join(F.broadcast(bitmap))
         .withColumn("__maybe__", maybe)
         .drop("__bloom__")

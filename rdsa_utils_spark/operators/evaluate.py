@@ -23,7 +23,7 @@ cross-engine contract:
   before the sum (the established quantize-then-sum recipe for FP
   folds).
 - ``mrr_at_k`` / ``map_at_k`` — binary-relevance MRR and MAP: rank
-  joins against a (broadcast by default) deduplicated qrels frame,
+  joins against a broadcast deduplicated qrels frame,
   reciprocal-rank / precision terms quantized to 9 dp before the
   decimal-exact fold.
 - ``cohens_kappa`` — inter-annotator agreement from the (group,
@@ -194,7 +194,6 @@ def ndcg_at_k(
     rank_col: str = "rank",
     rel_col: str = "rel",
     round_to: int = 6,
-    broadcast_qrels: bool = True,
 ) -> DataFrame:
     """Graded-relevance NDCG@k per query.
 
@@ -211,9 +210,9 @@ def ndcg_at_k(
     integer ≥ 3 is irrational, so gains never sit on the half-quantum
     boundary and both engines round identically.
 
-    Windows partition by query id — embarrassingly parallel; qrels
-    join is broadcast by default (qrels are dimension-sized in every
-    evaluation pipeline; disable for corpus-scale qrels).
+    Windows partition by query id — embarrassingly parallel; the
+    qrels side of the join is broadcast (qrels are dimension-sized in
+    every evaluation pipeline).
 
     Returns ``query_col, dcg, idcg, ndcg`` (ndcg 0.0 when a query has
     no relevant documents).
@@ -242,12 +241,11 @@ def ndcg_at_k(
         .groupBy("__q__", "__d__")
         .agg(F.max("__rel__").alias("__rel__"))
     )
-    qr_j = F.broadcast(qr) if broadcast_qrels else qr
-
     hits = (
         runs.filter(F.col(rank_col) <= k)
         .join(
-            qr_j,
+            # broadcast: Catalyst cannot size qrels built from driver rows (an RDD scan)
+            F.broadcast(qr),
             (F.col(query_col) == F.col("__q__"))
             & (F.col(doc_col) == F.col("__d__")),
             "left",
@@ -309,7 +307,6 @@ def mrr_at_k(
     rank_col: str = "rank",
     rel_col: str = "rel",
     round_to: int = 6,
-    broadcast_qrels: bool = True,
 ) -> DataFrame:
     """Mean Reciprocal Rank @ k over all queries (binary relevance:
     any qrels row with positive relevance counts as relevant; queries
@@ -329,11 +326,11 @@ def mrr_at_k(
     qr = qr.select(
         F.col(query_col).alias("__q__"), F.col(doc_col).alias("__d__")
     ).distinct()
-    qr_j = F.broadcast(qr) if broadcast_qrels else qr
     first_rel = (
         runs.filter(F.col(rank_col) <= k)
         .join(
-            qr_j,
+            # broadcast: Catalyst cannot size qrels built from driver rows (an RDD scan)
+            F.broadcast(qr),
             (F.col(query_col) == F.col("__q__"))
             & (F.col(doc_col) == F.col("__d__")),
             "left_semi",
@@ -365,7 +362,6 @@ def map_at_k(
     rank_col: str = "rank",
     rel_col: str = "rel",
     round_to: int = 6,
-    broadcast_qrels: bool = True,
 ) -> DataFrame:
     """Mean Average Precision @ k (binary relevance), one row per
     query: ``AP = (Σ_{hit at rank r} precision@r) / min(|rel|, k)``.
@@ -373,7 +369,7 @@ def map_at_k(
     Precision@r terms are rationals hits/r — each rounded to 9 dp,
     then a decimal-exact per-query sum and one final division.
     Windows partition per query (embarrassingly parallel); qrels
-    broadcast by default. Returns ``query_col, n_rel, ap`` (queries
+    broadcast. Returns ``query_col, n_rel, ap`` (queries
     with no relevant docs get ap = 0.0).
     """
     if k < 1:
@@ -382,11 +378,11 @@ def map_at_k(
     qr = qr.select(
         F.col(query_col).alias("__q__"), F.col(doc_col).alias("__d__")
     ).distinct()
-    qr_j = F.broadcast(qr) if broadcast_qrels else qr
     marked = (
         runs.filter(F.col(rank_col) <= k)
         .join(
-            qr_j,
+            # broadcast: Catalyst cannot size qrels built from driver rows (an RDD scan)
+            F.broadcast(qr),
             (F.col(query_col) == F.col("__q__"))
             & (F.col(doc_col) == F.col("__d__")),
             "left",
@@ -607,7 +603,7 @@ def silhouette_simplified(
         F.col(vec_col).alias("__v__"),
     )
     scored = (
-        rows.join(F.broadcast(cents))
+        rows.join(cents)
         .withColumn("__d__", F.sqrt(_dist2(F.col("__v__"), F.col("__c"))))
         .groupBy("__id__", "__rcl__")
         .agg(

@@ -1092,7 +1092,7 @@ def time_decayed_agg(
         mx = base.agg(F.max(t).alias("__ref__"))
         src = base.select(
             *by, t.alias("__t__"), *( [value_col] if value_col else [] ),
-        ).crossJoin(F.broadcast(mx))
+        ).crossJoin(mx)
     w = F.round(
         F.pow(
             F.lit(2.0),

@@ -137,9 +137,9 @@ def impute_nulls(
             .select(*group_cols, F.col("__v").alias("__fill"))
         )
     if group_cols:
-        joined = df.join(F.broadcast(stats), group_cols, "left")
+        joined = df.join(stats, group_cols, "left")
     else:
-        joined = df.crossJoin(F.broadcast(stats))
+        joined = df.crossJoin(stats)
     return joined.withColumn(
         out, F.coalesce(v, F.col("__fill")),
     ).drop("__fill")

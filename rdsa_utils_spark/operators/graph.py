@@ -27,8 +27,8 @@ Design (Spark-first, deterministic):
   relative to edges — is broadcast into the join, and the
   ``groupBy(dst)`` reuses the existing hash partitioning, so an
   iteration shuffles O(nodes), not O(edges). Past
-  ``max_broadcast_nodes`` the join falls back to a plain shuffle
-  hash-join (AQE handles celebrity-node skew). A pin
+  ``_MAX_BROADCAST_NODES`` the planner picks the join strategy (AQE
+  handles celebrity-node skew). A pin
   after every iteration materializes the ranks exactly like
   ``dedup_clusters`` does, so the executed DAG never grows with the
   iteration count.
@@ -45,6 +45,16 @@ from pyspark.sql import functions as F
 from rdsa_utils_spark.plans.tuning import pin
 
 __all__ = ["pagerank", "cooccurrence_pairs", "triangle_count", "connected_components", "label_propagation"]
+
+#: Node count up to which the iterative operators broadcast their
+#: per-node vector into every round's join.
+_MAX_BROADCAST_NODES = 10_000_000
+
+
+def _broadcast_small(df: DataFrame, n_nodes: int) -> DataFrame:
+    """Hint a per-node side of a loop join while the graph is small."""
+    # broadcast: both sides read the previous round's pin, and a cluster pin's scan has no size statistic
+    return F.broadcast(df) if n_nodes <= _MAX_BROADCAST_NODES else df
 
 
 def cooccurrence_pairs(
@@ -138,16 +148,15 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     rank_col: str = "rank",
-    max_broadcast_nodes: int = 10_000_000,
 ) -> DataFrame:
     """Ranks after ``iterations`` synchronous PageRank steps over the
     directed (optionally weighted) edge list. Returns one row per
     node: (node, ``rank_col``). Parallel edges are additive weight;
     self-loops are legal ordinary edges (filter them upstream if the
     semantics call for it). While the graph has at most
-    ``max_broadcast_nodes`` nodes the rank vector is broadcast each
+    ``_MAX_BROADCAST_NODES`` nodes the rank vector is broadcast each
     round and only O(nodes) rows shuffle per iteration; beyond that
-    every join falls back to shuffle hash-joins."""
+    the planner picks the join strategy."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if not 0.0 < damping < 1.0:
@@ -163,10 +172,6 @@ def pagerank(
         .transform(pin)  # count() below materializes it
     )
     n = nodes.count()
-    small = n <= max_broadcast_nodes
-
-    def _bcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
 
     outw = e.groupBy("__src").agg(F.sum("__w").alias("__wout"))
     # Loop invariant, computed once: per-edge share, pre-partitioned on
@@ -190,7 +195,7 @@ def pagerank(
     ranks = nodes.select("node", (F.lit(1.0) / F.lit(float(n))).alias(rank_col))
     for _ in range(iterations):
         msgs = (
-            shares.join(_bcast(ranks), shares["__src"] == ranks["node"])
+            shares.join(_broadcast_small(ranks, n), shares["__src"] == ranks["node"])
             .groupBy("__dst")
             .agg(F.sum(F.col("__share") * F.col(rank_col)).alias("__m"))
         )
@@ -199,7 +204,7 @@ def pagerank(
         # action for the last round) instead of paying a dedicated
         # job per iteration (round-12: 5 fewer jobs per call here).
         ranks = (
-            nodes.join(_bcast(msgs), nodes["node"] == msgs["__dst"], "left")
+            nodes.join(_broadcast_small(msgs, n), nodes["node"] == msgs["__dst"], "left")
             .select(
                 "node",
                 (
@@ -298,7 +303,7 @@ def association_rules(
     return (
         pair_counts.join(ante, "antecedent")
         .join(cons, "consequent")
-        .crossJoin(F.broadcast(n_baskets))
+        .crossJoin(n_baskets)
         .select(
             "antecedent",
             "consequent",
@@ -325,7 +330,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    max_broadcast_nodes: int = 10_000_000,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over the
     UNDIRECTED graph induced by ``edges``: every node starts in its
@@ -344,7 +348,7 @@ def label_propagation(
     materialized once, pre-partitioned on the message destination and
     persisted (loop-invariant); the label vector (O(nodes)) is
     broadcast per round while the graph fits
-    ``max_broadcast_nodes``, so an iteration shuffles O(nodes) for
+    ``_MAX_BROADCAST_NODES``, so an iteration shuffles O(nodes) for
     the per-(node, label) counts, never the edges; per-round
     pin keeps the DAG depth constant.
     """
@@ -358,15 +362,12 @@ def label_propagation(
         .persist()
     )
     nodes = und.select(F.col("__dst").alias("node")).distinct().transform(pin)
-    small = nodes.count() <= max_broadcast_nodes  # count() materializes
-
-    def _bcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
+    n = nodes.count()  # materializes the pin
 
     labels = nodes.select("node", F.col("node").alias("community"))
     for _ in range(iterations):
         counts = (
-            und.join(_bcast(labels), und["__src"] == labels["node"])
+            und.join(_broadcast_small(labels, n), und["__src"] == labels["node"])
             .groupBy(F.col("__dst").alias("__n"), "community")
             .agg(F.count(F.lit(1)).alias("__cnt"))
         )
@@ -390,7 +391,7 @@ def label_propagation(
         # caller's action — keeps the plan one scan deep without a
         # per-round job.
         labels = (
-            labels.join(_bcast(best), "node", "left")
+            labels.join(_broadcast_small(best, n), "node", "left")
             .select("node", F.coalesce("__new", "community").alias("community"))
             .transform(pin)
         )

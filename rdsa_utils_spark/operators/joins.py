@@ -2,9 +2,9 @@
 
 Capability parity:
 - ``join_multi_dfs`` — reference ``rdsa_utils/helpers/pyspark.py:1511-1550``
-  (left-fold equi-join over a list of DataFrames). Ours adds optional
-  broadcast of the non-first sides and supports Spark's full join-type
-  vocabulary (semi/anti included — absent from the reference but free).
+  (left-fold equi-join over a list of DataFrames). Ours supports
+  Spark's full join-type vocabulary (semi/anti included — absent from
+  the reference but free).
 
 Extensions (no reference equivalent — SURVEY.md §2.4 flags these as
 new work for the ``events`` table):
@@ -39,22 +39,18 @@ def join_multi_dfs(
     df_list: Sequence[DataFrame],
     on: Union[str, Sequence[str]],
     how: str = "inner",
-    broadcast_tail: bool = False,
 ) -> DataFrame:
     """Left-fold equi-join over ``df_list``.
 
-    ``broadcast_tail=True`` hints every frame after the first as the
-    broadcast side — the right call when folding a large fact with
-    several dimension tables (region/nation/supplier-sized): each join
-    becomes a BroadcastHashJoin, zero shuffles of the fact.
+    The join strategy is left to the planner: a dimension-sized frame
+    under the session's broadcast threshold becomes the build side of a
+    BroadcastHashJoin without a hint.
     """
     if not df_list:
         raise ValueError("join_multi_dfs: empty df_list")
     if how not in _VALID_HOW:
         raise ValueError(f"join_multi_dfs: invalid how={how!r}")
     head, *tail = df_list
-    if broadcast_tail:
-        tail = [F.broadcast(t) for t in tail]
     return reduce(lambda left, right: left.join(right, on=on, how=how), tail, head)
 
 
@@ -327,6 +323,7 @@ def bloom_semi_join(
     bitmap = build_bloom_bitmap(keys, "__key__", m_bits, k_hashes)
     maybe = bloom_probe_expr(left_on, m_bits, k_hashes)
     flagged = (
+        # broadcast: the bitmap is driver-built rows, an RDD scan with no size statistic
         left.join(F.broadcast(bitmap))
         .withColumn("__maybe__", F.col(left_on).isNotNull() & maybe)
         .drop("__bloom__")

@@ -301,7 +301,7 @@ def bt_ratings(
             .alias("__t"),
         )
         ratings = (
-            raw.crossJoin(F.broadcast(total))
+            raw.crossJoin(total)
             .select(
                 "__i",
                 F.round(

@@ -175,21 +175,16 @@ def referential_violations(
     col: str,
     dim: DataFrame,
     dim_col: str,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Count rows whose non-null ``col`` has no match in
     ``dim[dim_col]`` (foreign-key expectation). NULLs pass — pair with
     :func:`not_null` to forbid them.
 
-    Left-anti join against the distinct key column only; the dim side
-    is broadcast by default (dimension key sets are small even at
-    100 TB fact scale — a billion distinct int64 keys is ~8 GB, so the
-    flag exists for the rare fat-dim case, which falls back to a
-    shuffle join).
+    Left-anti join against the distinct key column only; the planner
+    broadcasts the key set while it is under the session's threshold
+    and shuffle-joins a fat dimension.
     """
     keys = dim.select(F.col(dim_col).alias("__fk__")).distinct()
-    if broadcast_dim:
-        keys = F.broadcast(keys)
     label = f"references({col})"
     total = df.agg(F.count(F.lit(1)).alias("rows_checked"))
     orphans = (
@@ -405,7 +400,7 @@ def benford_deviation(
         "digit", F.coalesce(F.col("n_obs"), F.lit(0)).alias("n_obs"),
     )
     total = counts.agg(F.sum("n_obs").alias("__n"))
-    t = counts.crossJoin(F.broadcast(total))
+    t = counts.crossJoin(total)
     expected = (
         F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit").cast("double"))
         * F.col("__n").cast("double")

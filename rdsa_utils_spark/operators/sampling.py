@@ -344,7 +344,7 @@ def mix_corpora(
     c = counts.agg(
         F.min(F.col("__n").cast("double") / F.col("__p")).alias("__C"),
     )
-    rates = counts.crossJoin(F.broadcast(c)).select(
+    rates = counts.crossJoin(c).select(
         source_col,
         F.when(
             F.col("__n") > 0,
@@ -356,6 +356,7 @@ def mix_corpora(
     )
     u = hash_uniform(id_col, seed)
     return (
+        # broadcast: Catalyst estimates a cross join's output as the product of its inputs
         df.join(F.broadcast(rates), source_col)
         .filter(u < F.col("__rate"))
         .drop("__rate")
@@ -552,7 +553,7 @@ def temperature_resample(
         F.sum("__n__").alias("__ntot__"),
     )
     rates = (
-        counts.crossJoin(F.broadcast(tot))
+        counts.crossJoin(tot)
         .withColumn(
             "__rate__",
             F.pow(F.col("__n__").cast("double"), F.lit(alpha))
@@ -563,6 +564,7 @@ def temperature_resample(
         .select(group_col, "__rate__")
     )
     out = (
+        # broadcast: Catalyst estimates a cross join's output as the product of its inputs
         df.join(F.broadcast(rates), group_col)
         .withColumn(
             copy_col,
@@ -625,6 +627,7 @@ def temporal_split(
 
     def _attach(bound_df: DataFrame) -> DataFrame:
         return (
+            # broadcast: Catalyst sizes the exact path's one-row boundary as the pin it filters
             df.crossJoin(F.broadcast(bound_df))
             .withColumn(
                 split_col,
@@ -829,6 +832,7 @@ def token_budget_mix(
     # whole buckets too (well-spread: sources × n_buckets partitions,
     # narrow rows; the rows were already shuffled for the old
     # boundary window's exchange anyway).
+    # broadcast: buckets reads a pin, and a cluster pin's scan has no size statistic
     staged = d.join(F.broadcast(buckets), [source_col, "__bkt"]).filter(
         (F.col("__cum_end") <= F.col("__budget")) | (F.col("__offset") < F.col("__budget")),
     )
@@ -978,7 +982,7 @@ def neyman_sample(
         F.col("__tw").cast("double") > 0, F.col("__tw").cast("double"),
     ).otherwise(F.col("__tn").cast("double"))
     allocation = (
-        weighted.crossJoin(F.broadcast(totals))
+        weighted.crossJoin(totals)
         .select(
             "stratum",
             "n_pop",

@@ -14,9 +14,9 @@ expressed entirely in native Spark SQL (JVM, codegen'd; no Python).
   the exploded rows (map-side partial combine does most of the work:
   a term repeating inside one document collapses before the shuffle).
 - Corpus-level scalars (N, avgdl) are computed by a single-row
-  aggregate and attached via ``crossJoin(broadcast(...))`` — the
-  standard scalar-subquery-as-broadcast pattern used elsewhere in
-  this engine (no driver-side collect in the plan).
+  aggregate and attached via ``crossJoin`` — a one-row side the
+  planner broadcasts without a hint, the scalar-subquery pattern used
+  elsewhere in this engine (no driver-side collect in the plan).
 - Document-frequency tables are aggregates over (term) — bounded by
   vocabulary (BM25: bounded by the query-term list, so broadcast).
 """
@@ -80,8 +80,8 @@ def bm25_topk(
         )
         .transform(pin)
     )
-    # Corpus scalars as a broadcast single row; term document
-    # frequencies bounded by |query_terms| -> broadcast join.
+    # Corpus scalars as a single row; term document frequencies
+    # bounded by |query_terms| -> broadcast join.
     scalars = df.select(
         F.count("*").alias("__n_docs__"),
         F.avg(F.size(tokens(text_col))).alias("__avgdl__"),
@@ -96,8 +96,9 @@ def bm25_topk(
         F.col("__tf__") + k1 * (1 - b + b * F.col("__dl__") / F.col("__avgdl__"))
     )
     return (
+        # broadcast: dfreq aggregates a pin, and a cluster pin's scan has no size statistic
         tf.join(F.broadcast(dfreq), "__term__")
-        .crossJoin(F.broadcast(scalars))
+        .crossJoin(scalars)
         .groupBy(id_col)
         .agg(F.round(F.sum(idf * norm_tf), 6).alias("bm25"))
         .orderBy(F.col("bm25").desc(), id_col)
@@ -152,7 +153,7 @@ def tf_idf_top_terms(
     )
     return (
         tf.join(dfreq, "__term__")
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .withColumn("__tfidf__", tfidf)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

@@ -91,40 +91,19 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     return size
 
 
-def _fits_broadcast(
-    df: DataFrame,
-    max_broadcast_bytes: int,
-    max_broadcast_rows: int | None = None,
-) -> bool:
-    """Decide whether a frame's vector payload may be gathered on the
-    driver and broadcast.
+def _fits_broadcast(max_broadcast_bytes: int, *frames: DataFrame) -> bool:
+    """Decide whether the frames' vector payloads may be gathered on
+    the driver together and broadcast.
 
     Mirrors Spark's own broadcast-join decision: a BYTES budget checked
-    against Catalyst plan statistics (no eager scan). The estimate is
-    doubled as a safety factor (compressed-on-disk → float64-in-memory).
-    An explicit ``max_broadcast_rows`` opts into the legacy row-count
-    guard (one metadata-cheap count job). Unknown statistics fail the
-    guard — the shuffle-safe path is always correct, just slower.
+    against Catalyst plan statistics (no eager scan). The budget caps
+    the COMBINED gather, so estimates are summed; the sum is doubled as
+    a safety factor (compressed-on-disk → float64-in-memory). Unknown
+    statistics fail the guard — the shuffle-safe path is always
+    correct, just slower.
     """
-    if max_broadcast_rows is not None:
-        return df.count() <= max_broadcast_rows
-    est = _plan_size_bytes(df)
-    return est is not None and 2 * est <= max_broadcast_bytes
-
-
-def _fits_broadcast_pair(
-    queries: DataFrame,
-    corpus: DataFrame,
-    max_broadcast_bytes: int,
-    max_broadcast_rows: int | None = None,
-) -> bool:
-    """Two-frame broadcast guard: the budget caps the COMBINED gather
-    (both vector sets land on the driver together), so estimates are
-    summed rather than checked per frame."""
-    if max_broadcast_rows is not None:
-        return queries.count() + corpus.count() <= max_broadcast_rows
-    eq, ec = _plan_size_bytes(queries), _plan_size_bytes(corpus)
-    return eq is not None and ec is not None and 2 * (eq + ec) <= max_broadcast_bytes
+    ests = [_plan_size_bytes(f) for f in frames]
+    return None not in ests and 2 * sum(ests) <= max_broadcast_bytes
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -258,15 +237,15 @@ def brute_force_topk(
 
 
 def _broadcast_cosine_topk(c, q, k, out_cols, pre_filter=None):
-    """Shared exact-scoring core: crossJoin(broadcast(q)) → optional
-    predicate BEFORE the top-k (so survivors are the global winners,
-    not a post-filtered top-k) → deterministic left-fold cosine →
-    per-query top-k. ``c``/``q`` are projections carrying
+    """Shared exact-scoring core: crossJoin(q), whose small query side
+    the planner broadcasts → optional predicate BEFORE the top-k (so
+    survivors are the global winners, not a post-filtered top-k) →
+    deterministic left-fold cosine → per-query top-k. ``c``/``q`` are projections carrying
     ``__cv__/__cn__`` and ``__qv__/__qn__`` plus the named
     ``out_cols``; one implementation serves brute_force_topk,
     hard_negative_topk and label_noise_scores so a scoring fix (e.g.
     a zero-norm guard) lands everywhere at once."""
-    joined = c.crossJoin(F.broadcast(q))
+    joined = c.crossJoin(q)
     if pre_filter is not None:
         joined = joined.filter(pre_filter)
     scored = joined.select(
@@ -365,7 +344,6 @@ def lsh_bucketed_topk(
     exclude_self: bool = True,
     *,
     max_broadcast_bytes: int = DEFAULT_MAX_BROADCAST_BYTES,
-    max_broadcast_rows: int | None = None,
     plane_method: str = "gaussian",
 ) -> DataFrame:
     """Approximate cosine top-k: score only candidates sharing an LSH
@@ -398,17 +376,10 @@ def lsh_bucketed_topk(
     # Estimate on the (id, vector) projection actually gathered, so
     # heavy unrelated columns can't spuriously fail the byte budget;
     # with two distinct frames the budget caps the summed gather.
-    if queries is corpus:
-        fits = _fits_broadcast(
-            corpus.select(corpus_id, corpus_vec), max_broadcast_bytes, max_broadcast_rows,
-        )
-    else:
-        fits = _fits_broadcast_pair(
-            queries.select(query_id, query_vec),
-            corpus.select(corpus_id, corpus_vec),
-            max_broadcast_bytes,
-            max_broadcast_rows,
-        )
+    gathered = [corpus.select(corpus_id, corpus_vec)]
+    if queries is not corpus:
+        gathered.append(queries.select(query_id, query_vec))
+    fits = _fits_broadcast(max_broadcast_bytes, *gathered)
     if fits:
         scored = _score_pairs_broadcast_2sided(
             queries, corpus, pairs, query_id, query_vec, corpus_id, corpus_vec,
@@ -529,7 +500,6 @@ def cosine_near_dup_pairs(
     seed: int = 42,
     *,
     max_broadcast_bytes: int = DEFAULT_MAX_BROADCAST_BYTES,
-    max_broadcast_rows: int | None = None,
     plane_method: str = "gaussian",
     expand: str = "members",
 ) -> DataFrame:
@@ -631,9 +601,7 @@ def cosine_near_dup_pairs(
     # size. The broadcast-or-not decision is made on the FULL frame
     # (pre-collapse behavior), while the scored vectors come from the
     # representative rows — pairs only ever reference rep ids.
-    if _fits_broadcast(
-        df.select(id_col, vec_col), max_broadcast_bytes, max_broadcast_rows,
-    ):
+    if _fits_broadcast(max_broadcast_bytes, df.select(id_col, vec_col)):
         scored = _score_pairs_broadcast(
             rep_rows, pairs, id_col, vec_col, threshold,
         )
@@ -782,8 +750,9 @@ def cosine_near_dup_pairs_exact(
         ma = id_map.select(F.col("id").alias("id_a"), F.col("__orig__").alias("__oa__"))
         mb = id_map.select(F.col("id").alias("id_b"), F.col("__orig__").alias("__ob__"))
         pairs = (
+            # broadcast: the id map is bounded by max_corpus_rows; by size alone the planner builds the pairs
             pairs.join(F.broadcast(ma), "id_a")
-            .join(F.broadcast(mb), "id_b")
+            .join(mb, "id_b")
             .select(
                 F.col("__oa__").alias("id_a"),
                 F.col("__ob__").alias("id_b"),
@@ -1050,7 +1019,7 @@ def standardize_dims(
             s.isNull() | (s == 0.0), F.lit(0.0),
         ).otherwise(F.round(d / s, round_to) + F.lit(0.0)),
     )
-    return df.crossJoin(F.broadcast(arrs)).withColumn(out_col, z).drop(
+    return df.crossJoin(arrs).withColumn(out_col, z).drop(
         "__mus", "__sds",
     )
 
@@ -1091,7 +1060,7 @@ def label_centroid_similarity(
     )
     a = cents.select(F.col("label").alias("label_a"), F.col("__c").alias("__ca"))
     b = cents.select(F.col("label").alias("label_b"), F.col("__c").alias("__cb"))
-    pairs = a.join(F.broadcast(b), F.col("label_a") < F.col("label_b"))
+    pairs = a.join(b, F.col("label_a") < F.col("label_b"))
     return pairs.select(
         "label_a",
         "label_b",
@@ -1303,6 +1272,7 @@ def pq_topk(
         lut_udf(F.col(query_vec)).alias("__lut__"),
     )
 
+    # broadcast: the query LUTs are the bounded side; by size alone the planner builds the corpus codes
     joined = corpus_codes.crossJoin(F.broadcast(q))
     if exclude_self:
         joined = joined.filter(F.col("candidate_id") != F.col("query_id"))
@@ -1336,7 +1306,7 @@ def pq_topk(
     )
     rescored = (
         shortlist.join(cv, "candidate_id")
-        .join(F.broadcast(qv), "query_id")
+        .join(qv, "query_id")
         .select(
             "query_id",
             "candidate_id",
@@ -2030,6 +2000,7 @@ def kmeans_profile(
     )
     cos9 = F.round(_dot(F.col(vec_col), F.col("__centroid")), 9)
     return (
+        # broadcast: createDataFrame over driver rows is an RDD scan with no size statistic
         assigned.join(F.broadcast(cent_df), cell_col)
         .groupBy(cell_col)
         .agg(

@@ -169,7 +169,7 @@ def chi_square_drift(
     totals = counts.agg(
         F.sum("n_a").alias("__ta"), F.sum("n_b").alias("__tb"),
     )
-    t = counts.crossJoin(F.broadcast(totals))
+    t = counts.crossJoin(totals)
     row_total = (F.col("n_a") + F.col("n_b")).cast("double")
     grand = (F.col("__ta") + F.col("__tb")).cast("double")
     exp_a = row_total * F.col("__ta").cast("double") / grand
@@ -231,7 +231,7 @@ def winsorize(
         v.isNull(), F.lit(None).cast("double"),
     ).otherwise(F.least(F.greatest(v, F.col("__lo")), F.col("__hi")))
     return (
-        df.join(F.broadcast(bounds), list(group_cols))
+        df.join(bounds, list(group_cols))
         .withColumn(out, _maybe_round(clipped, round_to))
         .drop("__lo", "__hi")
     )
@@ -285,7 +285,7 @@ def rfm_segments(
             s = s + F.when(F.col(v) >= F.col(q)[i], 1).otherwise(0)
         return s
 
-    scored = per_cust.crossJoin(F.broadcast(cuts)).select(
+    scored = per_cust.crossJoin(cuts).select(
         "customer",
         F.col("recency_days").cast("long").alias("recency_days"),
         F.col("frequency").cast("long").alias("frequency"),
@@ -335,7 +335,7 @@ def js_divergence(
         F.sum("__a").alias("n_a"), F.sum("__b").alias("n_b"),
     )
     totals = counts.agg(F.sum("n_a").alias("__ta"), F.sum("n_b").alias("__tb"))
-    t = counts.crossJoin(F.broadcast(totals))
+    t = counts.crossJoin(totals)
     p = F.col("n_a").cast("double") / F.col("__ta").cast("double")
     q = F.col("n_b").cast("double") / F.col("__tb").cast("double")
     m = (p + q) / F.lit(2.0)
@@ -700,7 +700,7 @@ def cuped_adjust(
     adjusted = F.col(metric_col) - theta * (F.col(covariate_col) - F.col("__mx"))
     rnd = (lambda x: F.round(x, round_to)) if round_to is not None else (lambda x: x)
     return (
-        df.crossJoin(F.broadcast(stats))
+        df.crossJoin(stats)
         .withColumn(out_col, rnd(adjusted))
         .drop("__cov", "__var", "__mx")
     )

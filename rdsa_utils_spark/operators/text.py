@@ -161,7 +161,7 @@ def unigram_lm_score(
         F.sum("__c").alias("__n"), F.count(F.lit(1)).alias("__v"),
     )
     s = float(smoothing)
-    logprob = counts.crossJoin(F.broadcast(totals)).select(
+    logprob = counts.crossJoin(totals).select(
         "__tok",
         F.log(
             (F.col("__c").cast("double") + F.lit(s))
@@ -503,16 +503,14 @@ def boilerplate_ngrams(
         .agg(F.count(F.lit(1)).alias("__df"))
     )
     vocab = (
-        docfreq.crossJoin(F.broadcast(n_docs))
+        docfreq.crossJoin(n_docs)
         .filter(
             F.col("__df").cast("double")
             > F.lit(float(max_doc_frac)) * F.col("__n_docs").cast("double"),
         )
         .agg(F.collect_list("__sh").alias("__boiler"))
     )
-    scored = df.select(F.col(id_col), sh.alias("__doc_sh")).crossJoin(
-        F.broadcast(vocab),
-    )
+    scored = df.select(F.col(id_col), sh.alias("__doc_sh")).crossJoin(vocab)
     n_sh = F.size("__doc_sh")
     n_boiler = F.size(
         F.array_intersect("__doc_sh", F.coalesce("__boiler", F.array())),
@@ -693,8 +691,8 @@ def collocation_pmi(
         pair_counts.filter(F.col("n_pair") >= min_count)
         .join(u1, "w1")
         .join(u2, "w2")
-        .crossJoin(F.broadcast(totals))
-        .crossJoin(F.broadcast(n_tokens))
+        .crossJoin(totals)
+        .crossJoin(n_tokens)
         .select(
             "w1",
             "w2",
@@ -775,7 +773,7 @@ def bigram_lm_score(
     s = float(smoothing)
     logprob = (
         pair_counts.join(left_counts, "__w1")
-        .crossJoin(F.broadcast(vocab_size))
+        .crossJoin(vocab_size)
         .select(
             "__w1",
             "__w2",
@@ -865,7 +863,7 @@ def term_log_odds(
     )
     z = delta / F.sqrt(1.0 / ca_s + 1.0 / cb_s)
     return (
-        aligned.crossJoin(F.broadcast(totals))
+        aligned.crossJoin(totals)
         .filter((F.col("count_a") + F.col("count_b")) >= min_count)
         .select(
             "term",

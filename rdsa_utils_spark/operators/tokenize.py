@@ -548,6 +548,7 @@ def bpe_encode_ids(
             dict_df.select(
                 "word", F.posexplode("__syms__").alias("__sp__", "sym"),
             )
+            # broadcast: Catalyst sizes the vocabulary as the corpus explode it is derived from
             .join(F.broadcast(vocab_ids), "sym", "left")
             .groupBy("word")
             .agg(

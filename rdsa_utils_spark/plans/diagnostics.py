@@ -40,7 +40,7 @@ def key_skew_report(
         F.count("*").alias("__n_keys__"),
     )
     return (
-        counts.crossJoin(F.broadcast(stats))
+        counts.crossJoin(stats)
         .select(
             *keys,
             "key_count",

@@ -17,7 +17,6 @@ Capability parity (public-API re-design):
 
 from __future__ import annotations
 
-import os
 import re
 import time
 from typing import Optional, Sequence, Tuple
@@ -197,27 +196,13 @@ def set_df_columns_nullable(
 #: Deliberately far below the 128 MB-1 GB guide range for plain scans:
 #: ensure_parallelism is only applied where downstream per-row work
 #: (shingle hashing, n-gram bucketing, vector math, resampling)
-#: amplifies each input byte many times over. Overridable per call or
-#: via SPARK_GRAFT_SPREAD_TASK_BYTES.
+#: amplifies each input byte many times over.
 DEFAULT_SPREAD_TASK_BYTES = 64 * 1024
-
-
-def _spread_task_bytes() -> int:
-    """SPARK_GRAFT_SPREAD_TASK_BYTES as a positive int; a non-numeric
-    or non-positive value falls back to the default (the value divides
-    the plan size, so 0 would raise)."""
-    try:
-        value = int(os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", DEFAULT_SPREAD_TASK_BYTES))
-    except ValueError:
-        return DEFAULT_SPREAD_TASK_BYTES
-    return value if value > 0 else DEFAULT_SPREAD_TASK_BYTES
 
 
 def ensure_parallelism(
     df: DataFrame,
-    min_partitions: Optional[int] = None,
     keys: Optional[Sequence[str]] = None,
-    bytes_per_task: Optional[int] = None,
 ) -> DataFrame:
     """Repartition up ONLY when the plan has fewer partitions than the
     DATA warrants — the small-file/local-file case where a downstream
@@ -227,17 +212,17 @@ def ensure_parallelism(
     with thousands of partitions.
 
     The target (round-13) is derived from the input SIZE, not from the
-    core count alone: ``clamp(size_bytes / bytes_per_task, min(8,
-    cores), cores)`` using Catalyst's optimized-plan size estimate (no
-    job). Guide §2.2/§6: partitions should be sized by data; a core-
-    count constant over-splits tiny inputs into per-task fixed costs
-    (measured: a 0.6 MB corpus spread 32 ways paid ~0.1 s/task of
-    scheduler+GC overhead — 10-20x the useful work; 8-10 tasks ran the
-    same queries 1.4-1.7x faster end-to-end at the same core count,
-    while an 11 MB fact table still fills every core). The floor of
-    ``min(8, cores)`` reflects that callers only apply this device
-    where per-byte work is heavy, so raw bytes UNDER-estimate the
-    compute; the cap keeps the local exchange no wider than the
+    core count alone: ``clamp(size_bytes / DEFAULT_SPREAD_TASK_BYTES,
+    min(8, cores), cores)`` using Catalyst's optimized-plan size
+    estimate (no job). Guide §2.2/§6: partitions should be sized by
+    data; a core-count constant over-splits tiny inputs into per-task
+    fixed costs (measured: a 0.6 MB corpus spread 32 ways paid ~0.1
+    s/task of scheduler+GC overhead — 10-20x the useful work; 8-10
+    tasks ran the same queries 1.4-1.7x faster end-to-end at the same
+    core count, while an 11 MB fact table still fills every core). The
+    floor of ``min(8, cores)`` reflects that callers only apply this
+    device where per-byte work is heavy, so raw bytes UNDER-estimate
+    the compute; the cap keeps the local exchange no wider than the
     session. When the size estimate is unavailable the target falls
     back to the core count.
 
@@ -247,19 +232,15 @@ def ensure_parallelism(
     pass; picking a downstream join/window/group key lets the exchange
     double as that operator's required partitioning (no second
     shuffle)."""
-    if min_partitions is not None:
-        target = min_partitions
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        est = plan_size_in_bytes(df)
+    except Exception:  # py4j / unresolved-plan edge: fall back
+        est = None
+    if not est or est <= 0 or est >= (1 << 62):  # unknown estimate
+        target = cores
     else:
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        bpt = bytes_per_task or _spread_task_bytes()
-        try:
-            est = plan_size_in_bytes(df)
-        except Exception:  # py4j / unresolved-plan edge: fall back
-            est = None
-        if not est or est <= 0 or est >= (1 << 62):  # unknown estimate
-            target = cores
-        else:
-            target = max(min(8, cores), min(cores, -(-est // bpt)))
+        target = max(min(8, cores), min(cores, -(-est // DEFAULT_SPREAD_TASK_BYTES)))
     if df.rdd.getNumPartitions() < target:
         if keys:
             return df.repartition(target, *[F.col(k) for k in keys])

@@ -55,6 +55,12 @@ _COMMON_CONFIGS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # The one join-strategy policy: a side whose size estimate is under
+    # this threshold is broadcast at planning, and AQE re-plans a
+    # shuffle join as a broadcast one when a stage turns out that small.
+    # Code hints a join only where the planner cannot see a side's size,
+    # with a ``# broadcast:`` comment saying why (tests/test_pin_policy.py).
+    "spark.sql.autoBroadcastJoinThreshold": "10MB",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Parquet is the canonical storage format; always prune + push down.

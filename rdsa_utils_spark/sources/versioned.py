@@ -378,6 +378,7 @@ def compact_snapshot(
             df[c].eqNullSafe(F.col(f"__p_{c}__")) for c in pcols
         ]  # null-safe: a NULL partition must still meet its allocation
         df = (
+            # broadcast: alloc reads the counts pin, and a cluster pin's scan has no size statistic
             df.join(F.broadcast(alloc), cond)
             .withColumn(
                 "__salt__",

@@ -496,6 +496,7 @@ def _band_hit_parts(band_parts, bands, id_col: str, bloom_fpp: float):
     )
     return [
         sb.withColumn("__bk__", key)
+        # broadcast: the bitmap is driver-built rows, an RDD scan with no size statistic
         .crossJoin(F.broadcast(bloom))
         .filter(bloom_probe_expr("__bk__", m_bits, k_hashes))
         .select(
@@ -1358,6 +1359,7 @@ def write_stream_exact_dedup(
             # exchange-free; only the (batch-bounded) uncompacted tail
             # and the bloom survivors shuffle.
             seen_parts = [
+                # broadcast: the bitmap is driver-built rows, an RDD scan with no size statistic
                 p.crossJoin(F.broadcast(bloom))
                 .filter(bloom_probe_expr(fingerprint_col, m_bits, k_hashes))
                 .select(fingerprint_col)
@@ -1366,6 +1368,7 @@ def write_stream_exact_dedup(
             ]
             seen = reduce(DataFrame.unionByName, seen_parts)
             kept = within.join(
+                # broadcast: cut by a cross join with the bitmap, whose RDD scan has no size statistic
                 F.broadcast(seen), fingerprint_col, "left_anti",
             ).transform(pin, eager=True)
         kept.write.mode("overwrite").parquet(f"{path}/__batch__={batch_id}")

@@ -91,7 +91,6 @@ def psi_vs_reference(
     ref_count_col: str = "n_ref",
     smoothing: float = 0.5,
     round_to: int = 6,
-    broadcast_reference: bool = True,
 ) -> DataFrame:
     """PSI per window against the pinned reference: one row per
     (window, keys…) with ``n_a`` (reference size), ``n_b`` (window
@@ -104,8 +103,9 @@ def psi_vs_reference(
     row (n_b = 0, maximal shift) instead of disappearing from the
     monitor. Then the math is exactly
     :func:`operators.drift.psi_from_counts`. The reference is
-    keys×n_bins rows — broadcast by default; the windowed side joins
-    on (keys, bin) with no extra shuffle beyond its own grouping.
+    keys×n_bins rows — the planner broadcasts it while it is under the
+    session's threshold; the windowed side joins on (keys, bin) with no
+    extra shuffle beyond its own grouping.
     """
     keys = list(keys)
     window_cols = list(window_cols)
@@ -130,6 +130,7 @@ def psi_vs_reference(
             .distinct()
             .select(*[F.col(c).alias(g) for c, g in zip(keys, kg)])
         )
+        # broadcast: Catalyst sizes a distinct as its input, and the key set is metadata-sized
         groups = wins.crossJoin(F.broadcast(all_keys))
     else:
         groups = wins
@@ -147,8 +148,7 @@ def psi_vs_reference(
         F.coalesce(F.col(count_col), F.lit(0)).alias("__b__"),
     )
     ref = reference.select(*keys, bin_col, F.col(ref_count_col).alias("__a__"))
-    ref_j = F.broadcast(ref) if broadcast_reference else ref
-    joined = actual.join(ref_j, [*keys, bin_col], "left").select(
+    joined = actual.join(ref, [*keys, bin_col], "left").select(
         *by,
         bin_col,
         F.coalesce(F.col("__a__"), F.lit(0)).alias("__a__"),

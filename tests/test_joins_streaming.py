@@ -24,7 +24,7 @@ def test_join_multi_dfs_broadcast(spark):
     a = spark.createDataFrame([(1, "x"), (2, "y")], "k long, a string")
     b = spark.createDataFrame([(1, 10.0)], "k long, b double")
     c = spark.createDataFrame([(1, True)], "k long, c boolean")
-    out = join_multi_dfs([a, b, c], on="k", how="inner", broadcast_tail=True)
+    out = join_multi_dfs([a, b, c], on="k", how="inner")
     assert out.count() == 1
     assert set(out.columns) == {"k", "a", "b", "c"}
     with pytest.raises(ValueError):

@@ -208,6 +208,54 @@ def test_guard_ignores_docstrings_and_comments(tmp_path):
     assert _device_calls(f) == [6]
 
 
+# -- every join hint states why the planner needs it -------------------------
+
+_REASON = "# broadcast:"
+
+
+def _unexplained_hints(path: Path) -> list[int]:
+    """Lines of ``F.broadcast(...)`` calls with no ``# broadcast:``
+    comment on the call's line or the line before it."""
+    src = path.read_text()
+    lines = src.splitlines()
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(src, filename=str(path)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "broadcast"
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+        and not any(_REASON in line for line in lines[max(node.lineno - 2, 0):node.lineno])
+    ]
+
+
+def test_every_broadcast_hint_has_a_reason():
+    files = sorted((ROOT / "rdsa_utils_spark").rglob("*.py")) + [ROOT / "__spark_entry__.py"]
+    offenders = {
+        str(f.relative_to(ROOT)): lines for f in files if (lines := _unexplained_hints(f))
+    }
+    assert offenders == {}, (
+        "the session's size threshold and AQE choose join strategies; "
+        "hint only what the planner cannot see, and say why in a '# broadcast:' comment"
+    )
+
+
+def test_hint_guard_ignores_docstrings_and_comments(tmp_path):
+    f = tmp_path / "m.py"
+    f.write_text(
+        'def g(a, b):\n'
+        '    """Joins ``F.broadcast(b)`` in prose."""\n'
+        '    # F.broadcast(b) here is a comment\n'
+        '    # broadcast: the reason sits on the line before\n'
+        '    x = a.join(F.broadcast(b), "k")\n'
+        '    y = a.join(F.broadcast(b), "k")  # broadcast: same line\n'
+        '    sc.broadcast(b)\n'
+        '    return x.join(F.broadcast(y), "k")\n',
+    )
+    assert _unexplained_hints(f) == [8]
+
+
 # -- executor loss ----------------------------------------------------------
 
 

@@ -239,20 +239,15 @@ def test_lsh_near_dup_rescoring_broadcasts_under_guard(spark, sf_dir):
     assert plan_string(scored, "simple").count("MapInPandas") == 1
     assert _n_joins(scored) == 3, "expected bucket self-join + 2 expansion joins"
 
+    # The guard is BYTES (Catalyst plan stats), not rows — a 1-byte
+    # budget forces the shuffle-safe plan, without running any eager
+    # count job.
     fallback = cosine_near_dup_pairs(
-        emb, dim=64, threshold=0.3, bits=4, num_tables=2, max_broadcast_rows=1,
+        emb, dim=64, threshold=0.3, bits=4, num_tables=2, max_broadcast_bytes=1,
     )
     assert _n_joins(fallback) == 5, (
         "expected bucket join + 2 payload joins + 2 expansion joins"
     )
-
-    # The default guard is BYTES (Catalyst plan stats), not rows — a
-    # 1-byte budget must also force the shuffle-safe plan, without
-    # running any eager count job.
-    byte_fallback = cosine_near_dup_pairs(
-        emb, dim=64, threshold=0.3, bits=4, num_tables=2, max_broadcast_bytes=1,
-    )
-    assert _n_joins(byte_fallback) == 5, "byte budget should force payload joins"
 
 
 def test_bm25_plan_broadcasts_and_filters_early(spark, sf_dir):

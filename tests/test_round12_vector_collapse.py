@@ -98,7 +98,7 @@ def test_fallback_join_path_equals_broadcast_path(spark, dup_corpus):
 
     kw = dict(dim=16, threshold=0.35, bits=1, num_tables=16)
     bcast = cosine_near_dup_pairs(dup_corpus, **kw)
-    fallb = cosine_near_dup_pairs(dup_corpus, max_broadcast_rows=1, **kw)
+    fallb = cosine_near_dup_pairs(dup_corpus, max_broadcast_bytes=1, **kw)
     assert _pairs_set(bcast) == _pairs_set(fallb)
 
 

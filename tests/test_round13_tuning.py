@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from rdsa_utils_spark.plans.tuning import (
     DEFAULT_SPREAD_TASK_BYTES,
-    _spread_task_bytes,
     ensure_parallelism,
+    plan_size_in_bytes,
 )
 from rdsa_utils_spark.session import _COMMON_CONFIGS, _default_driver_memory
 
@@ -38,17 +38,13 @@ def test_tiny_input_floors_at_eight_not_cores(spark):
 
 
 def test_bytes_per_task_scales_target_to_cores(spark):
-    # Forcing a 1-byte quantum makes any frame "large": the target
-    # caps at the session's core count.
-    df = spark.range(0, 1000, 1, 1)
-    out = ensure_parallelism(df, keys=["id"], bytes_per_task=1)
-    assert out.rdd.getNumPartitions() == _cores(spark)
-
-
-def test_explicit_min_partitions_is_honored(spark):
-    df = spark.range(0, 1000, 1, 1)
-    out = ensure_parallelism(df, min_partitions=5, keys=["id"])
-    assert out.rdd.getNumPartitions() == 5
+    # A frame estimated at more than cores x 64 KiB is "large": the
+    # target caps at the session's core count.
+    cores = _cores(spark)
+    df = spark.range(0, 2 * cores * DEFAULT_SPREAD_TASK_BYTES // 8, 1, 1)
+    assert plan_size_in_bytes(df) > cores * DEFAULT_SPREAD_TASK_BYTES
+    out = ensure_parallelism(df, keys=["id"])
+    assert out.rdd.getNumPartitions() == cores
 
 
 def test_already_parallel_input_is_a_noop(spark):
@@ -58,26 +54,6 @@ def test_already_parallel_input_is_a_noop(spark):
     df = spark.range(0, 1000, 1, n)
     out = ensure_parallelism(df, keys=["id"])
     assert out is df
-
-
-def test_env_quantum_override(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", "1")
-    df = spark.range(0, 1000, 1, 1)
-    out = ensure_parallelism(df, keys=["id"])
-    assert out.rdd.getNumPartitions() == _cores(spark)
-
-
-@pytest.mark.parametrize("value", ["abc", "0"])
-def test_malformed_env_quantum_falls_back_to_default(spark, monkeypatch, value):
-    # A non-numeric or non-positive quantum must not raise (ValueError,
-    # ZeroDivisionError): it falls back to DEFAULT_SPREAD_TASK_BYTES.
-    df = spark.range(0, 1000, 1, 1)
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD_TASK_BYTES", raising=False)
-    expected = ensure_parallelism(df, keys=["id"]).rdd.getNumPartitions()
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_TASK_BYTES", value)
-    assert _spread_task_bytes() == DEFAULT_SPREAD_TASK_BYTES
-    out = ensure_parallelism(df, keys=["id"])
-    assert out.rdd.getNumPartitions() == expected
 
 
 def test_local_session_heap_is_machine_derived(spark):
