@@ -125,6 +125,48 @@ def minhash_coefficients(num_perm: int):
     return a_co, b_co
 
 
+def _shingle_hash_set(text: Optional[str], n: int):
+    """``text``'s distinct word-``n``-gram shingles as md5 hashes (first
+    8 digest bytes, little-endian, read as int64), sorted ascending.
+    The one hashing primitive of :func:`minhash_signatures`,
+    :func:`shingle_hash_sets` and :func:`_signatures_and_sets`."""
+    import hashlib
+
+    import numpy as np
+
+    toks = (text or "").split()
+    if not toks:
+        return np.empty(0, dtype=np.int64)
+    s = {" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 1))}
+    h = np.fromiter(
+        (int.from_bytes(hashlib.md5(x.encode("utf-8")).digest()[:8], "little") for x in s),
+        dtype=np.uint64,
+        count=len(s),
+    ).view(np.int64)
+    h.sort()
+    return h
+
+
+def _signature_rows(sets: list, num_perm: int):
+    """MinHash signatures (one int64 row of ``num_perm`` per set) of
+    shingle-hash sets: the minimum over each set of
+    ``(a_j·(u mod p) + b_j) mod p``, ``u`` the unsigned shingle hash;
+    an empty set gets the all-``p`` sentinel."""
+    import numpy as np
+
+    p = MINHASH_P
+    a_co, b_co = minhash_coefficients(num_perm)
+    sizes = np.fromiter((len(h) for h in sets), dtype=np.int64, count=len(sets))
+    sigs = np.full((len(sets), num_perm), p, dtype=np.int64)
+    nonempty = sizes > 0
+    if nonempty.any():
+        H = (np.concatenate(sets).view(np.uint64) % np.uint64(p)).astype(np.int64)
+        starts = (np.cumsum(sizes) - sizes)[nonempty]
+        for j in range(num_perm):
+            sigs[nonempty, j] = np.minimum.reduceat((a_co[j] * H + b_co[j]) % p, starts)
+    return sigs
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str,
@@ -145,43 +187,39 @@ def minhash_signatures(
     not codegen'd.) Seeded coefficients → deterministic across runs and
     executors. Docs with no shingles get all-``p`` sentinel signatures.
     """
-    import numpy as np
-
-    p = MINHASH_P
-    a_co, b_co = minhash_coefficients(num_perm)
     n = shingle_n
 
     @F.pandas_udf("array<long>")
     def _sig(texts: pd.Series) -> pd.Series:
-        import hashlib
-
-        all_h: list[int] = []
-        offsets = [0]
-        for t in texts:
-            toks = (t or "").split()
-            if toks:
-                shs = {
-                    " ".join(toks[i : i + n])
-                    for i in range(max(len(toks) - n + 1, 1))
-                }
-                all_h.extend(
-                    int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:8], "little") % p
-                    for s in shs
-                )
-            offsets.append(len(all_h))
-        H = np.asarray(all_h, dtype=np.int64)
-        starts = np.asarray(offsets[:-1])
-        ends = np.asarray(offsets[1:])
-        nonempty = ends > starts
-        sigs = np.full((len(texts), num_perm), p, dtype=np.int64)
-        if H.size:
-            ne_starts = starts[nonempty]
-            for j in range(num_perm):
-                ph = (a_co[j] * H + b_co[j]) % p
-                sigs[nonempty, j] = np.minimum.reduceat(ph, ne_starts)
-        return pd.Series(list(sigs))
+        sets = [_shingle_hash_set(t, n) for t in texts]
+        return pd.Series(list(_signature_rows(sets, num_perm)))
 
     return df.withColumn(out_col, _sig(F.col(text_col)))
+
+
+def _signatures_and_sets(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_perm: int,
+    shingle_n: int,
+) -> DataFrame:
+    """(``id_col``, ``minhash``, ``shingle_hashes``): the signature of
+    :func:`minhash_signatures` and the set of :func:`shingle_hash_sets`
+    from ONE pandas UDF that hashes each shingle once."""
+    n = shingle_n
+
+    @F.pandas_udf("struct<minhash:array<long>,shingle_hashes:array<long>>")
+    def _both(texts: pd.Series) -> pd.DataFrame:
+        sets = [_shingle_hash_set(t, n) for t in texts]
+        return pd.DataFrame({
+            "minhash": list(_signature_rows(sets, num_perm)),
+            "shingle_hashes": sets,
+        })
+
+    return df.select(F.col(id_col), _both(F.col(text_col)).alias("__both__")).select(
+        id_col, "__both__.minhash", "__both__.shingle_hashes",
+    )
 
 
 def band_hash_rows(
@@ -199,38 +237,26 @@ def band_hash_rows(
     it and the streaming near-dup gate stores/probes it — the stored
     and probed hashes must be the same construction, so neither site
     may inline its own copy.
+
+    Built as ONE SQL expression: a single parse, where the equivalent
+    ``F.*`` construction made about 250 py4j round trips (16 bands).
     """
-    return df.select(
-        F.col(id_col).alias(out_id),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.conv(
-                            F.substring(
-                                F.md5(
-                                    F.concat_ws(
-                                        ",",
-                                        *[
-                                            F.element_at(signature_col, b * rows_per_band + r + 1)
-                                            for r in range(rows_per_band)
-                                        ],
-                                    ),
-                                ),
-                                1,
-                                12,
-                            ),
-                            16,
-                            10,
-                        )
-                        .cast("long")
-                        .alias("band_hash"),
-                    )
-                    for b in range(num_bands)
-                ],
-            ),
-        ).alias("bb"),
+
+    def q(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    structs = []
+    for b in range(num_bands):
+        vals = ", ".join(
+            f"element_at({q(signature_col)}, {b * rows_per_band + r + 1})"
+            for r in range(rows_per_band)
+        )
+        structs.append(
+            f"named_struct('band', {b}, 'band_hash', "
+            f"CAST(conv(substring(md5(concat_ws(',', {vals})), 1, 12), 16, 10) AS BIGINT))",
+        )
+    return df.selectExpr(
+        f"{q(id_col)} AS {q(out_id)}", f"explode(array({', '.join(structs)})) AS bb",
     ).select(out_id, "bb.band", "bb.band_hash")
 
 
@@ -320,29 +346,7 @@ def shingle_hash_sets(
 
     @F.pandas_udf("array<long>")
     def _sh(texts: pd.Series) -> pd.Series:
-        import hashlib
-
-        import numpy as np
-
-        out = []
-        for t in texts:
-            toks = (t or "").split()
-            if not toks:
-                out.append(np.empty(0, dtype=np.int64))
-                continue
-            m = max(len(toks) - n + 1, 1)
-            s = {" ".join(toks[i : i + n]) for i in range(m)}
-            h = np.fromiter(
-                (
-                    int.from_bytes(hashlib.md5(x.encode("utf-8")).digest()[:8], "little")
-                    for x in s
-                ),
-                dtype=np.uint64,
-                count=len(s),
-            ).view(np.int64)
-            h.sort()
-            out.append(h)
-        return pd.Series(out)
+        return pd.Series([_shingle_hash_set(t, n) for t in texts])
 
     return df.withColumn(out_col, _sh(F.col(text_col)))
 
@@ -361,42 +365,22 @@ def ngram_jaccard_pairs(
     (``shingle_hash_sets`` — a doc can appear in many candidate pairs,
     and round-1 profiling showed per-pair re-shingling was the single
     slowest bench line). The narrow (id, sorted-hash-array) frame
-    joins to the pairs twice; |∩| is then a vectorized sorted-array
-    intersection per pair — numpy ``intersect1d`` on pre-sorted unique
-    arrays, no Python string work on the hot path. |A∪B| =
-    |A|+|B|−|∩|, so jaccard is a ratio of exact integers,
-    bit-identical to the ANSI-SQL oracle.
+    joins to the pairs twice; |∩| is then ``size(array_intersect)``
+    in the JVM, as in :func:`containment_pairs`, so the pair side runs
+    no Python stage. |A∪B| = |A|+|B|−|∩|, so jaccard is a ratio of
+    exact integers, bit-identical to the ANSI-SQL oracle; two empty
+    sets score 0.
 
-    The sets frame is deliberately NOT checkpointed here: when the
-    corpus is small enough Catalyst plans both attach joins as
-    broadcast hash joins over ONE shared broadcast exchange
-    (ReusedExchange), so the shingle UDF runs once and the pairs never
-    shuffle. (A ``localCheckpoint`` was measurably worse: a
-    checkpointed frame has no size statistics, which forces two
-    shuffled sort-merge joins.) At 100 TB the optimizer falls back to
-    sort-merge and the UDF would run once per join side — callers at
-    that scale pass ``sets_df`` (precomputed via
-    :func:`shingle_hash_sets`, persisted at the call site where its
-    lifetime is known, and unpersisted after the action).
+    Without ``sets_df`` the sets come from the plain ``df``, unpinned:
+    both attach joins then read one subtree, and when the corpus is
+    small Catalyst plans them as broadcast hash joins over ONE shared
+    broadcast exchange (ReusedExchange), so the shingle UDF runs once
+    and the pairs never shuffle. At 100 TB the optimizer falls back to
+    sort-merge and the UDF would run once per join side, so callers
+    that already hold the sets pass ``sets_df`` (id, sorted hash
+    array; as :func:`shingle_hash_sets`, pinned where its lifetime is
+    known), as :func:`minhash_near_dedup` does.
     """
-
-    @F.pandas_udf("double")
-    def _jaccard_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        vals = np.zeros(len(sa), dtype=np.float64)
-        for i, (a, b) in enumerate(zip(sa, sb)):
-            na, nb = len(a), len(b)
-            if na == 0 and nb == 0:
-                continue
-            inter = np.intersect1d(
-                np.asarray(a, dtype=np.int64),
-                np.asarray(b, dtype=np.int64),
-                assume_unique=True,
-            ).size
-            vals[i] = inter / (na + nb - inter)
-        return pd.Series(vals)
-
     if sets_df is None:
         from rdsa_utils_spark.plans.tuning import ensure_parallelism
 
@@ -412,11 +396,7 @@ def ngram_jaccard_pairs(
             F.col(id_c).alias("__tid__"), F.col(sh_c).alias("__sh__"),
         )
     # Join on explicit conditions and project AFTER each join so both
-    # join sides reference the same sets_df subtree (best case the
-    # planner shares one broadcast exchange; worst case the shingle
-    # pass runs once per side — it is a narrow 0.7s-per-5k-docs
-    # vectorized stage, and large-corpus callers inject a persisted
-    # ``sets_df`` anyway).
+    # join sides reference the same sets_df subtree.
     sa = sets_df.alias("__sa_side__")
     sb = sets_df.alias("__sb_side__")
     out = (
@@ -428,8 +408,11 @@ def ngram_jaccard_pairs(
         .withColumnRenamed("__sh__", "__sb__")
         .drop("__tid__")
     )
+    inter = F.size(F.array_intersect("__sa__", "__sb__"))
+    union = F.size("__sa__") + F.size("__sb__") - inter
     return out.withColumn(
-        "jaccard", _jaccard_udf(F.col("__sa__"), F.col("__sb__")),
+        "jaccard",
+        F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0)),
     ).drop("__sa__", "__sb__")
 
 
@@ -450,6 +433,14 @@ def minhash_near_dedup(
     transitive closure run this to a fixed point — each iteration is a
     bounded set of shuffles, preferable at scale to an unbounded
     connected-components job when duplicate clusters are shallow.
+
+    One Python pass: a single pandas UDF over the representative docs
+    hashes each shingle once and returns both the MinHash signature
+    and the sorted shingle-hash set (bit-identical to
+    :func:`minhash_signatures` and :func:`shingle_hash_sets`). That
+    frame is pinned and feeds both the LSH banding and the exact
+    Jaccard verify (``ngram_jaccard_pairs(sets_df=...)``, computed in
+    the JVM); only the UDF's input is spread over the cores.
 
     Blank/NULL documents are excluded from the LSH stage — they all
     share the sentinel all-``p`` signature, so one band bucket would
@@ -484,7 +475,6 @@ def minhash_near_dedup(
         )
     from pyspark.sql import Window
 
-    df = ensure_parallelism(df)
     eligible = df.filter(F.length(F.trim(F.col(text_col))) > 0)
     # The collapse's only wide operation is a NARROW window: the
     # shuffle carries (id, 16-byte digest) rows, never text or
@@ -507,25 +497,27 @@ def minhash_near_dedup(
         .filter(F.col("__rn__") > 1)
         .select(id_col)
         # Pinned: this loser-id frame feeds BOTH the representative
-        # anti-join (executed while materializing the banded-signature
-        # pin) and the final loser union — without the pin the
+        # anti-join (executed while materializing the signature pin)
+        # and the final loser union — without the pin the
         # scan+md5+window subtree executes once per consumer. The frame
         # stores only the ids of non-minimal exact-dup members: empty
         # when there are no exact dups, and exactly the rows the
         # collapse removes when there are — never corpus-sized.
         .transform(pin)
     )
-    rep_docs = eligible.join(exact_losers, id_col, "left_anti")
-    with_sig = minhash_signatures(rep_docs, text_col, num_perm, shingle_n)
+    rep_docs = ensure_parallelism(
+        eligible.select(F.col(id_col), F.col(text_col)),
+    ).join(exact_losers, id_col, "left_anti")
+    # Pinned: the banding and both verify-join sides read it.
+    hashed = _signatures_and_sets(
+        rep_docs, id_col, text_col, num_perm, shingle_n,
+    ).transform(pin)
     candidates = lsh_candidate_pairs(
-        with_sig, id_col, "minhash", num_bands, signature_length=num_perm,
+        hashed, id_col, "minhash", num_bands, signature_length=num_perm,
     )
-    # sets for verification come from the PLAIN filtered scan (full
-    # statistics → the two candidate-attach joins keep their shared
-    # broadcast exchange; see ngram_jaccard_pairs); candidates only
-    # reference representative ids, extra rows just go unprobed.
     verified = ngram_jaccard_pairs(
-        eligible, candidates, id_col, text_col, shingle_n,
+        rep_docs, candidates, id_col, text_col, shingle_n,
+        sets_df=hashed.drop("minhash"),
     ).filter(F.col("jaccard") >= jaccard_threshold)
     losers = (
         verified.select(F.col("id_b").alias(id_col))

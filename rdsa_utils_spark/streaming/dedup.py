@@ -694,7 +694,7 @@ def write_stream_near_dedup(
         # greater id of each confirmed pair drops (batch semantics).
         # Shingle sets for the verify come from the PLAIN eligible
         # frame (candidates only reference representative ids; extra
-        # rows go unprobed), exactly as in the batch operator.
+        # rows go unprobed); the Jaccard itself runs in the JVM.
         cand = lsh_candidate_pairs(
             sig, id_col, "minhash", num_bands, signature_length=num_perm,
         )

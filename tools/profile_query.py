@@ -7,7 +7,10 @@ For each named query (default: the N slowest from BENCH_DETAIL.json):
   noop WRITE separately, over N runs after a discarded warmup;
 * counts Spark JOBS, STAGES and TASKS the query triggers per run and
   sums executor task runtime (from the JVM AppStatusStore), so
-  scheduling overhead vs compute is visible without the UI;
+  scheduling overhead vs compute is visible without the UI. Each run's
+  construction and write run under their own job groups, and the
+  counts are sums over those groups' jobs, so they stay right after the
+  store drops old jobs and stages (``spark.ui.retainedStages``);
 * for construction alone, counts the jobs it launches and the py4j
   round trips it makes (and the seconds spent in them), the floor a
   query pays before it runs;
@@ -29,26 +32,46 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _store_totals(spark):
-    """(n_jobs, n_stages, n_tasks, task_time_ms) from AppStatusStore."""
+@contextlib.contextmanager
+def _job_group(spark, group: str):
+    """Run the block's Spark jobs under their own job group."""
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jobs = store.jobsList(None)
-    n_jobs = jobs.size()
-    n_stages = 0
-    n_tasks = 0
-    task_ms = 0
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _group_totals(spark, *groups: str):
+    """(n_jobs, n_stages, n_tasks, task_time_ms) summed over the jobs of
+    ``groups`` and their stages, read from the AppStatusStore once the
+    listener bus is drained (as ``perfbench/trace.py`` does). Skipped
+    stages count neither stages nor tasks."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    store = jsc.statusStore()
     gw = sc._gateway
-    empty = sc._jvm.java.util.ArrayList()
-    empty2 = sc._jvm.java.util.ArrayList()
     no_quantiles = gw.new_array(gw.jvm.double, 0)
-    slist = store.stageList(empty, False, False, no_quantiles, empty2)
-    for i in range(slist.size()):
-        s = slist.apply(i)
-        n_stages += 1
-        n_tasks += s.numCompleteTasks()
-        task_ms += s.executorRunTime()
-    return n_jobs, n_stages, n_tasks, task_ms
+    jobs = [j for g in groups for j in tracker.getJobIdsForGroup(g)]
+    stage_ids = set()
+    for j in jobs:
+        info = tracker.getJobInfo(j)
+        stage_ids.update((info.stageIds or []) if info else [])
+    n_stages = n_tasks = task_ms = 0
+    for sid in sorted(stage_ids):
+        attempts = store.stageData(sid, False, sc._jvm.java.util.ArrayList(), False, no_quantiles)
+        for i in range(attempts.size()):
+            st = attempts.apply(i)
+            if str(st.status()) == "SKIPPED":
+                continue
+            n_stages += 1
+            n_tasks += st.numCompleteTasks() + st.numFailedTasks()
+            task_ms += st.executorRunTime()
+    return len(jobs), n_stages, n_tasks, task_ms
 
 
 @contextlib.contextmanager
@@ -123,26 +146,26 @@ def main() -> None:
     out = {}
     for name in names:
         fn = qs[name]
-        spark.sparkContext.setJobDescription(f"profile:{name}")
         # warmup run (per-plan codegen)
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         cons, writes, jobs, stages, tasks, task_ms = [], [], [], [], [], []
-        for _ in range(runs):
-            j0, s0, t0n, m0 = _store_totals(spark)
-            with _py4j_trips() as trips:
+        for run in range(runs):
+            built, ran = f"profile:{name}:{run}:construct", f"profile:{name}:{run}:write"
+            with _job_group(spark, built), _py4j_trips() as trips:
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
                 t1 = time.perf_counter()
-            construct_jobs = _store_totals(spark)[0] - j0
-            df.write.format("noop").mode("overwrite").save()
+            with _job_group(spark, ran):
+                df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
-            j1, s1, t1n, m1 = _store_totals(spark)
+            construct_jobs = _group_totals(spark, built)[0]
+            n_jobs, n_stages, n_tasks, n_ms = _group_totals(spark, built, ran)
             cons.append(t1 - t0)
             writes.append(t2 - t1)
-            jobs.append(j1 - j0)
-            stages.append(s1 - s0)
-            tasks.append(t1n - t0n)
-            task_ms.append(m1 - m0)
+            jobs.append(n_jobs)
+            stages.append(n_stages)
+            tasks.append(n_tasks)
+            task_ms.append(n_ms)
         if plans_tag:
             pdir = os.path.join(
                 os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
